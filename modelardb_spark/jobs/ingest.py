@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.io.checkpoints import CheckpointStore
 from modelardb_spark.io.tables import DAY_MS, TableCatalog, with_part_key
-from modelardb_spark.operators.fit import fit_segments_wide
 from modelardb_spark.operators.rollup import (
     HOUR_MS,
     MINUTE_MS,

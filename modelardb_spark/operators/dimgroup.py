@@ -14,11 +14,12 @@ fit/decode matrix — regardless of how many conversations a member
 value matches, which is what survives 100 TB).
 
 Physical shape mirrors `fit_segments_grouped`: one shuffle keyed on
-(group, salt-day), rows sorted by (bin, member), and — because members
-within a bin arrive sorted by member index — a run of bins with a
-stable active set is ALREADY the row-major interleaved payload, so the
-fit consumes it with a plain reshape (no per-value Python). Active-set
-change detection is a per-BIN comparison, not per-row.
+(group, salt-day) and rows sorted by (bin, member) (fit.py's
+`_arrange` and `_stitched`). The adapter scatters each bin's rows by
+member index into one row of the shared group kernel's value and
+presence matrices (groupfit.py `_fit_group_bins`), so run detection,
+the single-bin bulk path and the cascade are the conversation groups'
+own.
 
 Trade-off (documented, the reference shares it): grouping only pays
 when members are actually aligned on the grid — sparse, weakly-
@@ -30,20 +31,20 @@ and the oracle pins exactness at bound 0 either way.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
+from modelardb_spark.operators.fit import _arrange, _key_change, _stitched
 from modelardb_spark.operators.groupfit import (
     GROUP_SEGMENT_SCHEMA,
-    _GCOLS,
-    _fit_group_run,
-    _rollup_from_exploded,
+    _fit_group_bins,
+    _member_columns,
+    _posexplode,
 )
+from modelardb_spark.operators.rollup import rollup_from_segments
 
 
 def dim_group_members(
@@ -88,200 +89,45 @@ def materialize_members(members: DataFrame) -> DataFrame:
     already applies (fine to ~tens of millions of series); beyond
     that, skip this and pass broadcast_registry=False so the registry
     stays distributed end to end. The round trip is Arrow both ways
-    (toPandas + createDataFrame-from-pandas) — a collect() of Row
+    (toArrow + createDataFrame of the Arrow table) — a collect() of Row
     objects re-pickles per row and cannot sustain that scale."""
     spark = members.sparkSession
-    return spark.createDataFrame(members.toPandas(), schema=members.schema)
-
-
-def _expand_ranges(starts, lens):
-    """Vectorized concatenation of integer ranges (see dedup)."""
-    lens = np.asarray(lens, dtype=np.int64)
-    starts = np.asarray(starts, dtype=np.int64)
-    nz = lens > 0
-    if not nz.all():
-        starts, lens = starts[nz], lens[nz]
-    n = int(lens.sum())
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    out = np.ones(n, dtype=np.int64)
-    firsts = np.cumsum(lens) - lens
-    out[firsts[0]] = starts[0]
-    if starts.size > 1:
-        out[firsts[1:]] = starts[1:] - (starts[:-1] + lens[:-1] - 1)
-    return np.cumsum(out)
+    return spark.createDataFrame(members.toArrow(), schema=members.schema)
 
 
 def _fit_dim_group_batches(
     error_bound: float, length_bound: int, interval_ms: int
 ):
-    """mapInPandas kernel over rows sorted by (gkey, salt, bin_ms,
-    midx): split into runs of a stable active-member set, reshape each
-    run's rows into the (T, K) interleaved matrix, and hand it to the
-    shared group cascade.
+    """Dimension adapter: rows (gkey, salt, bin_ms, midx, value, gsize)
+    sorted by (gkey, salt, bin_ms, midx) are scattered by `midx` into
+    one row per bin of the group kernel's value matrix; a member is
+    present where it has a row (its value may be anything, NaN too)."""
 
-    Round 7: run detection is fully vectorized (a uint64 member
-    bitmask per bin replaces the per-bin Python comparison loop), and
-    single-timestamp runs — the dominant shape on sparse-activity
-    series — emit in bulk per member-count class with the lockstep
-    Gorilla row encoder (`gorilla_compress_rows`), exactly like the
-    conversation-group fast path; the reference fold always selects
-    Gorilla for a 1-ts run (Swing's NaN ratio hands the fold on), so
-    the bulk rows are byte-identical to the per-run cascade."""
-    from modelardb_spark.models.cascade import MTID_GORILLA as _MTID_G
-    from modelardb_spark.models.gorilla import gorilla_compress_rows
-
-    def process(pdf: pd.DataFrame, out: dict[str, list]) -> list[pd.DataFrame]:
-        n = len(pdf)
-        if n == 0:
-            return []
-        gkey = pdf["gkey"].to_numpy()
-        salt = pdf["salt"].to_numpy()
-        ts = pdf["bin_ms"].to_numpy().astype(np.int64)
+    def block(pdf: pd.DataFrame) -> list[pd.DataFrame]:
+        newbin = _key_change(pdf, ("gkey", "salt", "bin_ms"))
+        newbin[0] = True
+        first = np.flatnonzero(newbin)
         midx = pdf["midx"].to_numpy().astype(np.int64)
-        val = pdf["value"].to_numpy().astype(np.float32)
         gsize = pdf["gsize"].to_numpy().astype(np.int64)
-        # bin boundaries: (gkey, salt, bin) change
-        newbin = np.ones(n, dtype=bool)
-        newbin[1:] = (
-            (gkey[1:] != gkey[:-1])
-            | (salt[1:] != salt[:-1])
-            | (ts[1:] != ts[:-1])
+        row_bin = np.cumsum(newbin) - 1
+        vals = np.full((first.size, int(gsize.max())), np.nan, dtype=np.float32)
+        vals[row_bin, midx] = pdf["value"].to_numpy().astype(np.float32)
+        present = np.zeros(vals.shape, dtype=bool)
+        present[row_bin, midx] = True
+        return _fit_group_bins(
+            pdf["gkey"].to_numpy()[first],
+            pdf["salt"].to_numpy()[first],
+            pdf["bin_ms"].to_numpy().astype(np.int64)[first],
+            vals,
+            present,
+            gsize[first],
+            error_bound,
+            length_bound,
+            interval_ms,
+            None,
         )
-        bstart = np.flatnonzero(newbin)
-        bend = np.concatenate((bstart[1:], [n]))
-        n_bins = bstart.size
-        bin_k = bend - bstart
-        b_gkey = gkey[bstart]
-        b_salt = salt[bstart]
-        b_ts = ts[bstart]
-        vector_ok = int(midx.max(initial=0)) < 64
-        if vector_ok:
-            # distinct member indexes per bin -> the power sum IS the
-            # set bitmask, so mask equality == same active-member set
-            b_mask = np.bitwise_or.reduceat(
-                np.uint64(1) << midx.astype(np.uint64), bstart
-            )
-        else:  # arbitrarily large member indexes: no compact mask
-            b_mask = np.zeros(n_bins, dtype=np.uint64)
-        brk = np.ones(n_bins, dtype=bool)
-        if n_bins > 1:
-            brk[1:] = (
-                (b_gkey[1:] != b_gkey[:-1])
-                | (b_salt[1:] != b_salt[:-1])
-                | ((b_ts[1:] - b_ts[:-1]) > interval_ms)
-                | (bin_k[1:] != bin_k[:-1])
-                | (b_mask[1:] != b_mask[:-1])
-            )
-            if not vector_ok:
-                for i in range(1, n_bins):
-                    if not brk[i] and not np.array_equal(
-                        midx[bstart[i] : bend[i]],
-                        midx[bstart[i - 1] : bend[i - 1]],
-                    ):
-                        brk[i] = True
-        rb = np.flatnonzero(brk)
-        run_lens = np.diff(np.append(rb, n_bins))
-        singles = run_lens == 1
-        bulk_frames: list[pd.DataFrame] = []
-        if vector_ok and singles.any():
-            sbin = rb[singles]  # bin index of each single-bin run
-            gap_cache: dict[tuple[int, int], list[int]] = {}
-            for k in np.unique(bin_k[sbin]):
-                sel = sbin[bin_k[sbin] == k]
-                k = int(k)
-                m = sel.size
-                ridx = _expand_ranges(bstart[sel], np.full(m, k))
-                vm = val[ridx].reshape(m, k)
-                tids_m = midx[ridx].reshape(m, k).tolist()
-                gs = gsize[bstart[sel]]
-                gaps_col = []
-                for row_t, g in zip(tids_m, gs.tolist()):
-                    key = (g, tuple(row_t))
-                    gp = gap_cache.get(key)
-                    if gp is None:
-                        present = set(row_t)
-                        gp = [t for t in range(g) if t not in present]
-                        gap_cache[key] = gp
-                    gaps_col.append(gp)
-                vlist = vm.tolist()
-                bulk_frames.append(
-                    pd.DataFrame(
-                        {
-                            "conv_id": b_gkey[sel],
-                            "start_ms": b_ts[sel],
-                            "end_ms": b_ts[sel],
-                            "interval_ms": np.full(m, interval_ms, dtype=np.int64),
-                            "mtid": np.full(m, _MTID_G, dtype=np.int32),
-                            "model": gorilla_compress_rows(vm),
-                            "n": np.full(m, k, dtype=np.int64),
-                            "group_size": np.full(m, k, dtype=np.int32),
-                            "tids": tids_m,
-                            "gaps": gaps_col,
-                            "seg_cnt": [[1] * k] * m,
-                            "seg_min": vlist,
-                            "seg_max": vlist,
-                            "seg_sum": vm.astype(np.float64).tolist(),
-                            "p0": np.full(m, np.nan),
-                            "p1": np.full(m, np.nan),
-                        },
-                        columns=_GCOLS,
-                    )
-                )
-            loop_runs = np.flatnonzero(~singles)
-        else:
-            loop_runs = np.arange(run_lens.size)
-        run_ends = np.append(rb, n_bins)[1:]
-        for r in loop_runs:
-            first_bin, last_bin = rb[r], run_ends[r] - 1
-            r0, r1 = bstart[first_bin], bend[last_bin]
-            k = int(bin_k[first_bin])
-            t_run = b_ts[first_bin : last_bin + 1]
-            vals2d = val[r0:r1].reshape(-1, k)
-            tids = [int(x) for x in midx[bstart[first_bin] : bend[first_bin]]]
-            _fit_group_run(
-                gkey[r0],
-                t_run,
-                vals2d,
-                tids,
-                list(range(int(gsize[r0]))),
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-        return bulk_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _GCOLS}
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            gk = pdf["gkey"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (gk[1:] != gk[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            bulk = process(pdf.iloc[:cut], out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-                out = {c: [] for c in _GCOLS}
-            yield from bulk
-        if carry is not None and len(carry):
-            bulk = process(carry, out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-            yield from bulk
-
-    return run
+    return _stitched(("gkey", "salt"), block)
 
 
 def fit_segments_dim_grouped(
@@ -294,19 +140,10 @@ def fit_segments_dim_grouped(
     shuffle, keyed on (gkey, salt-day) with the usual day salting, so a
     hot dimension member never exceeds one day x `max_group_size`
     members per task."""
-    salt_ms = cfg.salt_days * 86_400_000
-    rows = (
-        series.join(members, ["conv_id", "metric"])
-        .withColumn("salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long"))
-        .select("gkey", "salt", "bin_ms", "midx", "value", "gsize")
+    rows = series.join(members, ["conv_id", "metric"]).select(
+        "gkey", "bin_ms", "midx", "value", "gsize"
     )
-    num = cfg.shuffle_partitions or int(
-        series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = rows.repartition(num, "gkey", "salt").sortWithinPartitions(
-        "gkey", "salt", "bin_ms", "midx"
-    )
-    return arranged.mapInPandas(
+    return _arrange(rows, ("gkey",), cfg, then=("midx",)).mapInPandas(
         _fit_dim_group_batches(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         GROUP_SEGMENT_SCHEMA,
     )
@@ -325,47 +162,14 @@ def explode_dim_group_segments(
     it fits executor memory (~tens of millions of series). Beyond
     that, pass False — the join then shuffles on (gkey, tid), a key
     the exploded side is already clustered by."""
-    e = gseg.select(
-        F.col("conv_id").alias("gkey"),
-        "start_ms",
-        "end_ms",
-        "interval_ms",
-        "mtid",
-        "model",
-        "group_size",
-        "p0",
-        "p1",
-        F.posexplode("tids").alias("goff", "tid"),
-        "seg_cnt",
-        "seg_min",
-        "seg_max",
-        "seg_sum",
-    )
+    e = _posexplode(gseg).withColumnRenamed("conv_id", "gkey")
     reg = members.select(
         "gkey", F.col("midx").alias("tid"), "conv_id", "metric"
     )
     if broadcast_registry:
         reg = F.broadcast(reg)
-    return (
-        e.join(reg, ["gkey", "tid"])
-        .select(
-            "conv_id",
-            "metric",
-            "start_ms",
-            "end_ms",
-            "interval_ms",
-            "mtid",
-            "model",
-            F.element_at("seg_cnt", F.col("goff") + 1).alias("seg_cnt"),
-            F.element_at("seg_min", F.col("goff") + 1).alias("seg_min"),
-            F.element_at("seg_max", F.col("goff") + 1).alias("seg_max"),
-            F.element_at("seg_sum", F.col("goff") + 1).alias("seg_sum"),
-            "p0",
-            "p1",
-            "goff",
-            F.col("group_size").alias("gsize"),
-            F.col("gkey").alias("ukey"),
-        )
+    return e.join(reg, ["gkey", "tid"]).select(
+        "conv_id", "metric", *_member_columns(), F.col("gkey").alias("ukey")
     )
 
 
@@ -376,7 +180,7 @@ def rollup_from_dim_group_segments(
     broadcast_registry: bool = True,
 ) -> DataFrame:
     """Windowed rollup straight from dimension-group segments — the
-    shared analytic/dense tail over the registry-mapped explode."""
-    return _rollup_from_exploded(
+    per-series rollup tail over the registry-mapped explode."""
+    return rollup_from_segments(
         explode_dim_group_segments(gseg, members, broadcast_registry), window_ms
     )

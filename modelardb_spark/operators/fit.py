@@ -1,19 +1,22 @@
 """Model-fitting operator: series points -> compressed segments.
 
 The one genuinely custom operator of the engine (reference:
-core/SegmentGenerator.java). Physical shape:
+core/SegmentGenerator.java). Every fit — the three per-series inputs
+here, the conversation groups of groupfit.py and the dimension groups
+of dimgroup.py — has one physical shape, built by `_arrange` and
+`_stitched`:
 
-    series.repartition(conv_id, metric, salt)
-          .sortWithinPartitions(conv_id, metric, salt, bin_ms)
-          .mapInPandas(fit_batches)
+    rows.withColumn(salt).repartition(*keys, salt)
+        .sortWithinPartitions(*keys, salt, bin_ms)
+        .mapInPandas(_stitched(keys, block))
 
 rather than groupBy().applyInPandas(): a transcripts workload has a
 huge number of *small* series groups (conversations), and per-group
-Arrow round trips dominate. mapInPandas processes a whole 64k-row
-Arrow batch of many groups in one Python call; group boundaries are
-found vectorized, and a group split across two batches is stitched by
+Arrow round trips dominate. mapInPandas processes a whole Arrow batch
+of many groups in one Python call; group boundaries are found
+vectorized, and a group split across two batches is stitched by
 carrying the tail rows forward (batches arrive in partition-sort
-order).
+order). Each entry point only supplies the per-block function.
 
 Scale design:
 - **Salting**: the shuffle key includes ``salt = bin_ms div (salt_days
@@ -31,10 +34,11 @@ Scale design:
   emitted with pure NumPy across ALL groups in the batch; only
   genuinely mixed runs enter the per-run cascade.
 - **Aggregate-on-model columns**: seg_cnt/min/max/sum and decoded
-  model parameters (p0, p1) are materialized at fit time, so rollups
-  and min/max/sum/avg queries are plain Catalyst aggregations and
-  never re-enter Python for PMC/Swing segments (the reference's
-  SparkUDAF.scala layer becomes schema design).
+  model parameters (p0, p1) are materialized at fit time, so
+  whole-series min/max/sum/avg queries are plain Catalyst aggregations
+  and rollup partials of PMC/Swing segments are closed forms over
+  (p0, p1) that never decode a model (the reference's SparkUDAF.scala
+  layer becomes schema design).
 """
 
 from __future__ import annotations
@@ -263,124 +267,112 @@ def _flush(out: dict[str, list], interval_ms: int) -> pd.DataFrame | None:
     return df
 
 
-def _fit_batches(error_bound: float, length_bound: int, interval_ms: int):
+def _arrange(
+    df: DataFrame, keys: tuple[str, ...], cfg: EngineConfig, then: tuple[str, ...] = ()
+) -> DataFrame:
+    """The one physical shape every fit shares: add the day ``salt``,
+    shuffle once on (keys, salt), sort by (keys, salt, bin_ms, *then)."""
+    salt_ms = cfg.salt_days * 86_400_000
+    keyed = df.withColumn("salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long"))
+    num = cfg.shuffle_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    return keyed.repartition(num, *keys, "salt").sortWithinPartitions(
+        *keys, "salt", "bin_ms", *then
+    )
+
+
+def _key_change(pdf: pd.DataFrame, keys: tuple[str, ...]) -> np.ndarray:
+    """True at each row whose `keys` differ from the previous row's."""
+    change = np.zeros(len(pdf), dtype=bool)
+    for k in keys:
+        col = pdf[k].to_numpy()
+        change[1:] |= col[1:] != col[:-1]
+    return change
+
+
+def _stitched(keys: tuple[str, ...], block):
+    """mapInPandas body over rows sorted by `keys`: the trailing key
+    group of each Arrow batch (possibly continued in the next one) is
+    held back and prepended to the next batch, so `block(pdf)` always
+    sees whole key groups and returns the output frames for them."""
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _COLS}
         carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None and len(carry):
                 pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            metric = pdf["metric"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            # hold back the trailing (possibly incomplete) group; it is
-            # stitched to the next batch of this partition
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (
-                    (conv[1:] != conv[:-1])
-                    | (metric[1:] != metric[:-1])
-                    | (salt[1:] != salt[:-1])
-                )
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
+            cuts = np.flatnonzero(_key_change(pdf, keys))
+            if cuts.size == 0:
                 carry = pdf
                 continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            head = pdf.iloc[:cut]
-            ts = head["bin_ms"].to_numpy().astype(np.int64)
-            vals = head["value"].to_numpy().astype(np.float32)
-            keep = ~np.isnan(vals)
-            _fit_sorted_block(
-                conv[:cut][keep],
-                metric[:cut][keep],
-                salt[:cut][keep],
-                ts[keep],
-                vals[keep],
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
+            carry = pdf.iloc[cuts[-1] :]
+            yield from block(pdf.iloc[: cuts[-1]])
         if carry is not None and len(carry):
-            ts = carry["bin_ms"].to_numpy().astype(np.int64)
-            vals = carry["value"].to_numpy().astype(np.float32)
-            keep = ~np.isnan(vals)
-            _fit_sorted_block(
-                carry["conv_id"].to_numpy()[keep],
-                carry["metric"].to_numpy()[keep],
-                carry["salt"].to_numpy()[keep],
-                ts[keep],
-                vals[keep],
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
+            yield from block(carry)
 
     return run
+
+
+def _series_batches(keys: tuple[str, ...], fill, interval_ms: int):
+    """Stitched per-series driver: `fill(pdf, out)` fits whole key
+    groups into one `_fit_sorted_block` accumulator."""
+
+    def block(pdf: pd.DataFrame) -> list[pd.DataFrame]:
+        out: dict[str, list] = {c: [] for c in _COLS}
+        fill(pdf, out)
+        df = _flush(out, interval_ms)
+        return [] if df is None else [df]
+
+    return _stitched(keys, block)
+
+
+def _fit_batches(error_bound: float, length_bound: int, interval_ms: int):
+    """Narrow rows (conv_id, metric, salt, bin_ms, value)."""
+
+    def fill(pdf: pd.DataFrame, out: dict[str, list]) -> None:
+        vals = pdf["value"].to_numpy().astype(np.float32)
+        keep = ~np.isnan(vals)
+        _fit_sorted_block(
+            pdf["conv_id"].to_numpy()[keep],
+            pdf["metric"].to_numpy()[keep],
+            pdf["salt"].to_numpy()[keep],
+            pdf["bin_ms"].to_numpy().astype(np.int64)[keep],
+            vals[keep],
+            error_bound,
+            length_bound,
+            interval_ms,
+            out,
+        )
+
+    return _series_batches(("conv_id", "metric", "salt"), fill, interval_ms)
 
 
 def _fit_batches_wide(
     metrics: tuple[str, ...], error_bound: float, length_bound: int, interval_ms: int
 ):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _COLS}
-        carry: pd.DataFrame | None = None
+    """Wide rows: one row per active bin, one column per metric."""
 
-        def process(pdf: pd.DataFrame) -> None:
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            ts = pdf["bin_ms"].to_numpy().astype(np.int64)
-            for m in metrics:
-                vals = pdf[m].to_numpy().astype(np.float32)
-                keep = ~np.isnan(vals)
-                _fit_sorted_block(
-                    conv[keep],
-                    np.full(int(keep.sum()), m, dtype=object),
-                    salt[keep],
-                    ts[keep],
-                    vals[keep],
-                    error_bound,
-                    length_bound,
-                    interval_ms,
-                    out,
-                )
+    def fill(pdf: pd.DataFrame, out: dict[str, list]) -> None:
+        conv = pdf["conv_id"].to_numpy()
+        salt = pdf["salt"].to_numpy()
+        ts = pdf["bin_ms"].to_numpy().astype(np.int64)
+        for m in metrics:
+            vals = pdf[m].to_numpy().astype(np.float32)
+            keep = ~np.isnan(vals)
+            _fit_sorted_block(
+                conv[keep],
+                np.full(int(keep.sum()), m, dtype=object),
+                salt[keep],
+                ts[keep],
+                vals[keep],
+                error_bound,
+                length_bound,
+                interval_ms,
+                out,
+            )
 
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (conv[1:] != conv[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            process(pdf.iloc[:cut])
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-        if carry is not None and len(carry):
-            process(carry)
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-
-    return run
+    return _series_batches(("conv_id", "salt"), fill, interval_ms)
 
 
 def _fit_batches_turns(error_bound: float, length_bound: int, interval_ms: int):
@@ -391,22 +383,15 @@ def _fit_batches_turns(error_bound: float, length_bound: int, interval_ms: int):
     `_fit_sorted_block` fits both metric columns. Output rows are
     identical to `_fit_batches_wide` over `derive_series_wide`."""
 
-    def process(pdf: pd.DataFrame, out: dict[str, list]) -> None:
-        n = len(pdf)
-        if n == 0:
-            return
+    def fill(pdf: pd.DataFrame, out: dict[str, list]) -> None:
+        newbin = _key_change(pdf, ("conv_id", "salt", "bin_ms"))
+        newbin[0] = True
+        bs = np.flatnonzero(newbin)
+        counts = np.diff(np.append(bs, len(pdf)))
         conv = pdf["conv_id"].to_numpy()
         salt = pdf["salt"].to_numpy()
         ts = pdf["bin_ms"].to_numpy().astype(np.int64)
         tool = pdf["tool_flag"].to_numpy().astype(np.int64)
-        newbin = np.ones(n, dtype=bool)
-        newbin[1:] = (
-            (conv[1:] != conv[:-1])
-            | (salt[1:] != salt[:-1])
-            | (ts[1:] != ts[:-1])
-        )
-        bs = np.flatnonzero(newbin)
-        counts = np.diff(np.concatenate((bs, [n])))
         tools = np.add.reduceat(tool, bs)
         bconv, bsalt, bts = conv[bs], salt[bs], ts[bs]
         for name, vals in (("turn_rate", counts), ("tool_usage", tools)):
@@ -422,35 +407,7 @@ def _fit_batches_turns(error_bound: float, length_bound: int, interval_ms: int):
                 out,
             )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _COLS}
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (conv[1:] != conv[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            process(pdf.iloc[:cut], out)
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-        if carry is not None and len(carry):
-            process(carry, out)
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-
-    return run
+    return _series_batches(("conv_id", "salt"), fill, interval_ms)
 
 
 def fit_segments_from_transcripts(
@@ -474,7 +431,6 @@ def fit_segments_from_transcripts(
     more than the saved exchange; at the transcripts workload's ~1-2
     turns/bin the single exchange wins."""
     iv = cfg.interval_ms
-    salt_ms = cfg.salt_days * 86_400_000
     rows = transcripts.select(
         "conv_id",
         (
@@ -484,14 +440,8 @@ def fit_segments_from_transcripts(
         .otherwise(F.lit(0))
         .cast("tinyint")
         .alias("tool_flag"),
-    ).withColumn("salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long"))
-    num = cfg.shuffle_partitions or int(
-        transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    arranged = rows.repartition(num, "conv_id", "salt").sortWithinPartitions(
-        "conv_id", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
+    return _arrange(rows, ("conv_id",), cfg).mapInPandas(
         _fit_batches_turns(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         SEGMENT_SCHEMA,
     )
@@ -506,17 +456,7 @@ def fit_segments_wide(
     active bin carries every metric's value; Python fits each metric
     column over the shared timestamp grid. Output rows are identical to
     `fit_segments` on the unpivoted series."""
-    salt_ms = cfg.salt_days * 86_400_000
-    keyed = wide_series.withColumn(
-        "salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long")
-    )
-    num = cfg.shuffle_partitions or int(
-        wide_series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = keyed.repartition(num, "conv_id", "salt").sortWithinPartitions(
-        "conv_id", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
+    return _arrange(wide_series, ("conv_id",), cfg).mapInPandas(
         _fit_batches_wide(metrics, cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         SEGMENT_SCHEMA,
     )
@@ -527,17 +467,7 @@ def fit_segments(
 ) -> DataFrame:
     """series_points -> segments (SEGMENT_SCHEMA). One shuffle on the
     salted series key; fitting runs in sorted Arrow batches."""
-    salt_ms = cfg.salt_days * 86_400_000
-    keyed = series.withColumn(
-        "salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long")
-    )
-    num = cfg.shuffle_partitions or int(
-        series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = keyed.repartition(num, "conv_id", "metric", "salt").sortWithinPartitions(
-        "conv_id", "metric", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
+    return _arrange(series, ("conv_id", "metric"), cfg).mapInPandas(
         _fit_batches(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         SEGMENT_SCHEMA,
     )

@@ -20,11 +20,17 @@ Reference semantics re-expressed Spark-first:
   run is split whenever the active-member set changes, and each group
   segment stores `gaps` = the ABSENT tids (SegmentGroup offsets
   protocol, core/SegmentGroup.java:51-111).
+- *One kernel*: conversation groups (the wide adapter here) and
+  dimension groups (dimgroup.py) share `_fit_group_bins`. Each adapter
+  builds a per-bin value matrix and a presence matrix; the kernel
+  splits runs, emits single-bin runs in bulk and sends the rest through
+  the cascade. The batch driver and the shuffle are fit.py's.
 - *Explode*: at query time each group segment fans out to one logical
   segment per present tid (SegmentGroup.explode, :51-111) carrying
   (group_offset, group_size) so the decoder strides the interleaved
-  payload. Implemented as a JVM-side posexplode — no Python until the
-  dense decode itself.
+  payload. Implemented as a JVM-side posexplode; the exploded members
+  then take the per-series grid and rollup tails (a per-series segment
+  is a group of one), whose decoder does the stride.
 
 Model cascade for groups — the reference's any-model-on-group-stream
 contract (core/SegmentGenerator.java:154-167 iterates every configured
@@ -44,8 +50,6 @@ term (ModelType.java:49-54).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -67,15 +71,13 @@ from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
 from modelardb_spark.models import MTID_PMC, MTID_RAW, MTID_SWING
 from modelardb_spark.models.cascade import MTID_GORILLA, _ratio
 from modelardb_spark.models.errors import outside_bound_vec
-from modelardb_spark.models.gorilla import (
-    gorilla_compress,
-    gorilla_compress_rows,
-    gorilla_decompress,
-)
+from modelardb_spark.models.gorilla import gorilla_compress, gorilla_compress_rows
 from modelardb_spark.models.pmc_mean import pmc_model, pmc_prefix, pmc_value
 from modelardb_spark.models.swing import swing_minmax, swing_model, swing_sum
-from modelardb_spark.models.uncompressed import raw_decode, raw_model
-from modelardb_spark.operators.rollup import ROLLUP_SCHEMA
+from modelardb_spark.models.uncompressed import raw_model
+from modelardb_spark.operators.fit import _arrange, _stitched, fit_segments_wide
+from modelardb_spark.operators.grid import grid
+from modelardb_spark.operators.rollup import _PARTIAL_INPUT, rollup_from_segments
 
 GROUP_SEGMENT_SCHEMA = StructType(
     [
@@ -301,37 +303,6 @@ def _fit_one_group_segment(
     return seg_ts, stored_ratio
 
 
-def _fit_group_run(
-    conv: str,
-    ts: np.ndarray,
-    vals2d: np.ndarray,
-    tids: list[int],
-    all_tids: list[int],
-    error_bound: float,
-    length_bound: int,
-    interval_ms: int,
-    out: dict[str, list],
-) -> None:
-    """Cascade over one gap-free run of a fixed active-member set.
-
-    `vals2d` is (T, N) float32 for the present members only;
-    `tids`/`all_tids` give present members / the full group."""
-    n_ts, n_mem = vals2d.shape
-    inter = np.ascontiguousarray(vals2d).reshape(-1)  # row-major interleave
-    gaps = [t for t in all_tids if t not in tids]
-    # length_bound counts stored VALUES (data points incl. every member,
-    # like the reference's per-DataPoint accounting), floored to whole
-    # timestamps so a segment always covers full grid rows
-    max_vals = max(n_mem, (length_bound // n_mem) * n_mem)
-    pos = 0  # timestamp index
-    while pos < n_ts:
-        seg_ts, _ = _fit_one_group_segment(
-            conv, ts, vals2d, inter, pos, tids, gaps,
-            error_bound, max_vals, interval_ms, out,
-        )
-        pos += seg_ts
-
-
 def _split_subsets(
     window: np.ndarray, idx: list[int], error_bound: float
 ) -> list[list[int]]:
@@ -386,28 +357,37 @@ def _fit_group_run_dynamic(
     length_bound: int,
     interval_ms: int,
     out: dict[str, list],
-    split_fraction: float,
+    split_fraction: float | None = None,
 ) -> None:
-    """Ratio-FEEDBACK dynamic split/join over one run — the reference's
-    actual mechanism (SegmentGenerator.java:296-351, :403-455): keep a
-    running average of the group's finalized-segment compression
-    ratios; when a segment's ratio falls below `split_fraction x` that
-    average, split the group into subsets mutually within 2x the error
-    bound and fit them separately; attempt a rejoin after an
-    exponentially backed-off number of timestamps, rejoining when the
-    members' values are again mutually within the doubled bound.
-    Unlike the correlation router (input-driven), this adapts to what
-    actually compressed badly. At bound 0 both paths reconstruct
-    exactly, so the trigger only moves stored bytes."""
+    """Cascade over one gap-free run of a fixed active-member set.
+
+    `vals2d` is (T, N) float32 for the present members only;
+    `tids`/`all_tids` give present members / the full group.
+
+    With `split_fraction` set this is the ratio-FEEDBACK dynamic
+    split/join — the reference's actual mechanism
+    (SegmentGenerator.java:296-351, :403-455): keep a running average
+    of the group's finalized-segment compression ratios; when a
+    segment's ratio falls below `split_fraction x` that average, split
+    the group into subsets mutually within 2x the error bound and fit
+    them separately; attempt a rejoin after an exponentially backed-off
+    number of timestamps, rejoining when the members' values are again
+    mutually within the doubled bound. Unlike the correlation router
+    (input-driven), this adapts to what actually compressed badly. At
+    bound 0 both paths reconstruct exactly, so the trigger only moves
+    stored bytes. With `split_fraction=None` the split never triggers."""
     n_ts, n_mem = vals2d.shape
-    inter = np.ascontiguousarray(vals2d).reshape(-1)
+    inter = np.ascontiguousarray(vals2d).reshape(-1)  # row-major interleave
     gaps = [t for t in all_tids if t not in tids]
+    # length_bound counts stored VALUES (data points incl. every member,
+    # like the reference's per-DataPoint accounting), floored to whole
+    # timestamps so a segment always covers full grid rows
     max_vals = max(n_mem, (length_bound // n_mem) * n_mem)
     all_idx = list(range(n_mem))
 
     ratios: list[float] = []
     backoff = _REJOIN_BACKOFF_TS
-    pos = 0
+    pos = 0  # timestamp index
     while pos < n_ts:
         seg_ts, ratio = _fit_one_group_segment(
             conv, ts, vals2d, inter, pos, tids, gaps,
@@ -415,7 +395,8 @@ def _fit_group_run_dynamic(
         )
         pos += seg_ts
         trigger = (
-            n_mem > 1
+            split_fraction is not None
+            and n_mem > 1
             and pos < n_ts
             and len(ratios) > 0
             and ratio < split_fraction * (sum(ratios) / len(ratios))
@@ -433,7 +414,7 @@ def _fit_group_run_dynamic(
         while pos < n_ts:
             upto = min(pos + backoff, n_ts)
             for sub in subsets:
-                _fit_group_run(
+                _fit_group_run_dynamic(
                     conv,
                     ts[pos:upto],
                     np.ascontiguousarray(vals2d[pos:upto, sub]),
@@ -457,6 +438,122 @@ def _fit_group_run_dynamic(
         backoff = _REJOIN_BACKOFF_TS
 
 
+def _single_bin_segments(
+    bins: np.ndarray,
+    key: np.ndarray,
+    ts: np.ndarray,
+    vals: np.ndarray,
+    present: np.ndarray,
+    gsize: np.ndarray,
+    interval_ms: int,
+) -> list[pd.DataFrame]:
+    """Bulk path for single-timestamp runs — the dominant shape on
+    sparse-activity series (measured 996k of 998k runs at the 1M-turn
+    fixture). The reference fold for a 1-ts run always selects Gorilla
+    over the interleaved row (Swing needs 2 timestamps -> NaN ratio;
+    the NaN-fold quirk then hands the window to Gorilla, exactly like
+    the per-series singles case in operators/fit.py), so the segment is
+    closed-form and every column vectorizes: one lockstep Gorilla
+    encode (`gorilla_compress_rows`) per present-member count. 1-ts
+    runs cannot trigger the dynamic split (pos == n_ts) and the ratio
+    list is per-run state, so the rows are byte-identical to the
+    cascade with or without it."""
+    frames = []
+    k_of = present[bins].sum(axis=1)
+    for k in np.unique(k_of):
+        sel = bins[k_of == k]
+        m, k = sel.size, int(k)
+        vm = vals[sel[:, None], np.nonzero(present[sel])[1].reshape(m, k)]
+        # one (tids, gaps) list pair per distinct (group size, active set)
+        pats, inv = np.unique(
+            np.column_stack([gsize[sel], present[sel]]).astype(np.int64),
+            axis=0,
+            return_inverse=True,
+        )
+        tids_u = [np.flatnonzero(p[1:]).tolist() for p in pats]
+        gaps_u = [np.flatnonzero(p[1 : 1 + p[0]] == 0).tolist() for p in pats]
+        inv = inv.reshape(-1).tolist()
+        vlist = vm.tolist()
+        frames.append(
+            pd.DataFrame(
+                {
+                    "conv_id": key[sel],
+                    "start_ms": ts[sel],
+                    "end_ms": ts[sel],
+                    "interval_ms": np.full(m, interval_ms, dtype=np.int64),
+                    "mtid": np.full(m, MTID_GORILLA, dtype=np.int32),
+                    "model": gorilla_compress_rows(vm),
+                    "n": np.full(m, k, dtype=np.int64),
+                    "group_size": np.full(m, k, dtype=np.int32),
+                    "tids": [tids_u[i] for i in inv],
+                    "gaps": [gaps_u[i] for i in inv],
+                    "seg_cnt": [[1] * k] * m,
+                    "seg_min": vlist,
+                    "seg_max": vlist,
+                    "seg_sum": vm.astype(np.float64).tolist(),
+                    "p0": np.full(m, np.nan),
+                    "p1": np.full(m, np.nan),
+                },
+                columns=_GCOLS,
+            )
+        )
+    return frames
+
+
+def _fit_group_bins(
+    key: np.ndarray,
+    salt: np.ndarray,
+    ts: np.ndarray,
+    vals: np.ndarray,
+    present: np.ndarray,
+    gsize: np.ndarray,
+    error_bound: float,
+    length_bound: int,
+    interval_ms: int,
+    split_fraction: float | None,
+) -> list[pd.DataFrame]:
+    """The group kernel. Input is one row per bin, sorted by (key,
+    salt, ts): `vals` (bins, W) float32 member values, `present` (bins,
+    W) which members have a value, `gsize` the group size. A run breaks
+    on a key or salt change, a bin gap, or a change of the active
+    member set; single-bin runs go through the bulk path, every other
+    run through the cascade."""
+    n = ts.size
+    brk = np.ones(n, dtype=bool)
+    brk[1:] = (
+        (key[1:] != key[:-1])
+        | (salt[1:] != salt[:-1])
+        | ((ts[1:] - ts[:-1]) > interval_ms)
+        | (present[1:] != present[:-1]).any(axis=1)
+    )
+    starts = np.flatnonzero(brk)
+    ends = np.append(starts[1:], n)
+    single = (ends - starts == 1) & present[starts].any(axis=1)
+    frames = _single_bin_segments(
+        starts[single], key, ts, vals, present, gsize, interval_ms
+    )
+    out: dict[str, list] = {c: [] for c in _GCOLS}
+    for s, e in zip(starts[~single], ends[~single]):
+        tids = np.flatnonzero(present[s]).tolist()
+        if not tids:
+            continue
+        _fit_group_run_dynamic(
+            key[s],
+            ts[s:e],
+            vals[s:e][:, tids],
+            tids,
+            list(range(int(gsize[s]))),
+            error_bound,
+            length_bound,
+            interval_ms,
+            out,
+            split_fraction,
+        )
+    if out["n"]:
+        frames.insert(0, pd.DataFrame(out, columns=_GCOLS))
+    return frames
+
+
 def _fit_group_batches(
     metrics: tuple[str, ...],
     error_bound: float,
@@ -464,133 +561,28 @@ def _fit_group_batches(
     interval_ms: int,
     split_fraction: float | None = None,
 ):
-    from modelardb_spark.models.cascade import MTID_GORILLA as _MTID_G
+    """Wide adapter: rows (conv_id, salt, bin_ms, *metrics) sorted by
+    (conv_id, salt, bin_ms) are already one row per bin; a member is
+    present where its metric is not NaN."""
 
-    n_metrics = len(metrics)
-
-    def process(pdf: pd.DataFrame, out: dict[str, list]) -> pd.DataFrame | None:
-        conv = pdf["conv_id"].to_numpy()
-        salt = pdf["salt"].to_numpy()
-        ts = pdf["bin_ms"].to_numpy().astype(np.int64)
+    def block(pdf: pd.DataFrame) -> list[pd.DataFrame]:
         vals = np.column_stack(
             [pdf[m].to_numpy().astype(np.float32) for m in metrics]
         )
-        active = ~np.isnan(vals)  # (rows, M)
-        n = len(pdf)
-        if n == 0:
-            return None
-        brk = np.zeros(n, dtype=bool)
-        if n > 1:
-            brk[1:] = (
-                (conv[1:] != conv[:-1])
-                | (salt[1:] != salt[:-1])
-                | ((ts[1:] - ts[:-1]) > interval_ms)
-                | (active[1:] != active[:-1]).any(axis=1)
-            )
-        bounds = np.concatenate(([0], np.flatnonzero(brk), [n]))
-        bounds = np.unique(bounds)
-        all_tids = list(range(n_metrics))
+        return _fit_group_bins(
+            pdf["conv_id"].to_numpy(),
+            pdf["salt"].to_numpy(),
+            pdf["bin_ms"].to_numpy().astype(np.int64),
+            vals,
+            ~np.isnan(vals),
+            np.full(len(pdf), len(metrics)),
+            error_bound,
+            length_bound,
+            interval_ms,
+            split_fraction,
+        )
 
-        # --- bulk fast path: single-timestamp runs with every metric
-        # active (the dominant case on sparse-activity series: measured
-        # 996k of 998k runs at the 1M-turn fixture). The reference fold
-        # for a 1-ts run always selects Gorilla over the interleaved
-        # row (Swing needs 2 timestamps -> NaN ratio; the NaN-fold
-        # quirk then hands the window to Gorilla, exactly like the
-        # per-series singles case in operators/fit.py), so the segment
-        # is closed-form and every column vectorizes. 1-ts runs cannot
-        # trigger the dynamic split (pos == n_ts), and the ratio list
-        # is per-run state, so the bulk path is valid for the dynamic
-        # cascade too.
-        lens = np.diff(bounds)
-        starts = bounds[:-1]
-        is_bulk = np.zeros(lens.size, dtype=bool)
-        bulk_frame = None
-        if n_metrics == 2:
-            is_bulk = (lens == 1) & active[starts].all(axis=1)
-            bidx = starts[is_bulk]
-            if bidx.size:
-                v2 = vals[bidx]  # (M, 2) float32
-                vlist = v2.tolist()  # python floats, exact f32 values
-                m = bidx.size
-                svals = v2.astype(np.float64)
-                bulk_frame = pd.DataFrame(
-                    {
-                        "conv_id": conv[bidx],
-                        "start_ms": ts[bidx],
-                        "end_ms": ts[bidx],
-                        "interval_ms": np.full(m, interval_ms, dtype=np.int64),
-                        "mtid": np.full(m, _MTID_G, dtype=np.int32),
-                        "model": gorilla_compress_rows(v2),
-                        "n": np.full(m, 2, dtype=np.int64),
-                        "group_size": np.full(m, 2, dtype=np.int32),
-                        "tids": [[0, 1]] * m,
-                        "gaps": [[]] * m,
-                        "seg_cnt": [[1, 1]] * m,
-                        "seg_min": vlist,
-                        "seg_max": vlist,
-                        "seg_sum": svals.tolist(),
-                        "p0": np.full(m, np.nan),
-                        "p1": np.full(m, np.nan),
-                    },
-                    columns=_GCOLS,
-                )
-
-        for ridx in np.flatnonzero(~is_bulk):
-            s, e = bounds[ridx], bounds[ridx + 1]
-            tids = [int(j) for j in np.flatnonzero(active[s])]
-            if not tids:
-                continue
-            args = (
-                conv[s],
-                ts[s:e],
-                vals[s:e][:, tids],
-                tids,
-                all_tids,
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-            if split_fraction is None:
-                _fit_group_run(*args)
-            else:
-                _fit_group_run_dynamic(*args, split_fraction)
-        return bulk_frame
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _GCOLS}
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (conv[1:] != conv[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            bulk = process(pdf.iloc[:cut], out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-                out = {c: [] for c in _GCOLS}
-            if bulk is not None:
-                yield bulk
-        if carry is not None and len(carry):
-            bulk = process(carry, out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-                out = {c: [] for c in _GCOLS}
-            if bulk is not None:
-                yield bulk
-
-    return run
+    return _stitched(("conv_id", "salt"), block)
 
 
 def fit_segments_grouped(
@@ -608,17 +600,7 @@ def fit_segments_grouped(
     ratio-feedback dynamic split/join inside each run (see
     `_fit_group_run_dynamic`); pass `DYNAMIC_SPLIT_FRACTION` for the
     reference default of 10."""
-    salt_ms = cfg.salt_days * 86_400_000
-    keyed = wide_series.withColumn(
-        "salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long")
-    )
-    num = cfg.shuffle_partitions or int(
-        wide_series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = keyed.repartition(num, "conv_id", "salt").sortWithinPartitions(
-        "conv_id", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
+    return _arrange(wide_series, ("conv_id",), cfg).mapInPandas(
         _fit_group_batches(
             metrics,
             cfg.error_bound,
@@ -630,15 +612,9 @@ def fit_segments_grouped(
     )
 
 
-def explode_group_segments(
-    gseg: DataFrame, metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
-) -> DataFrame:
-    """Group segment -> one logical segment per present tid
-    (SegmentGroup.explode:51-111): the member keeps the shared
-    (start, end, mtid, model) plus (goff, gsize) so the decoder strides
-    the interleaved payload. Pure JVM (posexplode + element_at)."""
-    metric_arr = F.array(*[F.lit(m) for m in metrics])
-    e = gseg.select(
+def _posexplode(gseg: DataFrame) -> DataFrame:
+    """One row per present tid with its offset `goff` in the interleave."""
+    return gseg.select(
         "conv_id",
         "start_ms",
         "end_ms",
@@ -654,155 +630,49 @@ def explode_group_segments(
         "seg_max",
         "seg_sum",
     )
-    return e.select(
-        "conv_id",
-        F.element_at(metric_arr, F.col("tid") + 1).alias("metric"),
+
+
+def _member_columns() -> list:
+    """The per-series segment columns of an exploded member, plus the
+    (goff, gsize) stride of its shared payload."""
+    return [
         "start_ms",
         "end_ms",
         "interval_ms",
         "mtid",
         "model",
-        F.element_at("seg_cnt", F.col("goff") + 1).alias("seg_cnt"),
-        F.element_at("seg_min", F.col("goff") + 1).alias("seg_min"),
-        F.element_at("seg_max", F.col("goff") + 1).alias("seg_max"),
-        F.element_at("seg_sum", F.col("goff") + 1).alias("seg_sum"),
+        *[
+            F.element_at(c, F.col("goff") + 1).alias(c)
+            for c in ("seg_cnt", "seg_min", "seg_max", "seg_sum")
+        ],
         "p0",
         "p1",
         "goff",
         F.col("group_size").alias("gsize"),
-    )
-
-
-def decode_group_values(
-    mtid: int,
-    model: bytes,
-    n_ts: int,
-    gsize: int,
-    goff: int,
-    start_ms: int = 0,
-    interval_ms: int = 1,
-) -> np.ndarray:
-    """Member values of a group segment: decode the interleaved payload
-    and stride by (goff, gsize). PMC is the shared constant; Swing is
-    the shared line float32(a*t + b), identical for every member."""
-    if mtid == MTID_PMC:
-        return np.full(n_ts, pmc_value(model), dtype=np.float32)
-    if mtid == MTID_SWING:
-        from modelardb_spark.models.swing import swing_decode
-
-        a, b = swing_decode(model)
-        t = start_ms + interval_ms * np.arange(n_ts, dtype=np.float64)
-        return (a * t + b).astype(np.float32)
-    total = n_ts * gsize
-    if mtid == MTID_GORILLA:
-        return gorilla_decompress(model, total)[goff::gsize]
-    if mtid == MTID_RAW:
-        return raw_decode(model)[:total][goff::gsize]
-    raise ValueError(f"unsupported group mtid {mtid}")
-
-
-_POINT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("metric", StringType(), False),
-        StructField("bin_ms", LongType(), False),
-        StructField("value", FloatType(), False),
     ]
-)
 
 
-def _decode_member_batch(pdf: pd.DataFrame):
-    """Whole-batch decode of exploded dense group members: the
-    interleaved payload of each UNIQUE segment decodes once (members
-    exploded from one group row arrive consecutively, so consecutive
-    (conv_id, start, end) runs collapse; a non-adjacent duplicate only
-    costs a redundant decode, never correctness), then a strided
-    gather per member — returns (member_matrix (S, max_ts), n_ts,
-    start, si)."""
-    from modelardb_spark.models.segment import decode_dense_matrix
-
-    # members of one group row share `ukey` (the group key) even when
-    # their logical conv_id differs (dimension-driven cross-entity
-    # groups); per-conversation groups fall back to conv_id
-    conv = (
-        pdf["ukey"] if "ukey" in pdf.columns else pdf["conv_id"]
-    ).to_numpy()
-    start = pdf["start_ms"].to_numpy().astype(np.int64)
-    end = pdf["end_ms"].to_numpy().astype(np.int64)
-    si = pdf["interval_ms"].to_numpy().astype(np.int64)
-    gsize = pdf["gsize"].to_numpy().astype(np.int64)
-    goff = pdf["goff"].to_numpy().astype(np.int64)
-    n_ts = (end - start) // si + 1
-    totals = n_ts * gsize
-
-    first = np.ones(len(pdf), dtype=bool)
-    if len(pdf) > 1:
-        first[1:] = (
-            (conv[1:] != conv[:-1])
-            | (start[1:] != start[:-1])
-            | (end[1:] != end[:-1])
-        )
-    uniq = np.flatnonzero(first)
-    seg_of_row = np.cumsum(first) - 1
-    models = list(pdf["model"])
-    mat = decode_dense_matrix(
-        pdf["mtid"].to_numpy()[uniq], [models[i] for i in uniq], totals[uniq]
+def explode_group_segments(
+    gseg: DataFrame, metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
+) -> DataFrame:
+    """Group segment -> one logical segment per present tid
+    (SegmentGroup.explode:51-111): the member keeps the shared
+    (start, end, mtid, model) plus (goff, gsize) so the decoder strides
+    the interleaved payload. Pure JVM (posexplode + element_at)."""
+    metric_arr = F.array(*[F.lit(m) for m in metrics])
+    return _posexplode(gseg).select(
+        "conv_id",
+        F.element_at(metric_arr, F.col("tid") + 1).alias("metric"),
+        *_member_columns(),
     )
-    max_ts = int(n_ts.max()) if len(pdf) else 0
-    cols = goff[:, None] + gsize[:, None] * np.arange(max_ts, dtype=np.int64)
-    np.clip(cols, 0, mat.shape[1] - 1, out=cols)  # inactive tail lanes
-    member = mat[seg_of_row[:, None], cols]
-    return member, n_ts, start, si
 
 
 def grid_group(
     gseg: DataFrame, metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
 ) -> DataFrame:
-    """Group segments -> reconstructed per-series points. PMC members
-    take the JVM explode path (value = p0 column expression); dense
-    members decode vectorized with the group stride."""
-    exploded = explode_group_segments(gseg, metrics)
-    analytic = exploded.where(F.col("mtid").isin(MTID_PMC, MTID_SWING))
-    analytic_points = analytic.select(
-        "conv_id",
-        "metric",
-        "mtid",
-        "p0",
-        "p1",
-        F.explode(
-            F.sequence(F.col("start_ms"), F.col("end_ms"), F.col("interval_ms"))
-        ).alias("bin_ms"),
-    ).select(
-        "conv_id",
-        "metric",
-        "bin_ms",
-        F.when(F.col("mtid") == MTID_PMC, F.col("p0"))
-        .otherwise(F.col("p0") * F.col("bin_ms") + F.col("p1"))
-        .cast("float")
-        .alias("value"),
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            member, n_ts, start, si = _decode_member_batch(pdf)
-            idx = np.arange(member.shape[1], dtype=np.int64)
-            mask = idx[None, :] < n_ts[:, None]
-            yield pd.DataFrame(
-                {
-                    "conv_id": np.repeat(pdf["conv_id"].to_numpy(), n_ts),
-                    "metric": np.repeat(pdf["metric"].to_numpy(), n_ts),
-                    "bin_ms": (start[:, None] + si[:, None] * idx[None, :])[mask],
-                    "value": member[mask],
-                }
-            )
-
-    dense = exploded.where(~F.col("mtid").isin(MTID_PMC, MTID_SWING)).select(
-        "conv_id", "metric", "start_ms", "end_ms", "interval_ms",
-        "mtid", "model", "goff", "gsize",
-    )
-    return analytic_points.unionByName(dense.mapInPandas(decode, _POINT_SCHEMA))
+    """Group segments -> reconstructed per-series points: the explode,
+    then the per-series grid (whose decoder strides the members)."""
+    return grid(explode_group_segments(gseg, metrics))
 
 
 def rollup_from_group_segments(
@@ -810,76 +680,10 @@ def rollup_from_group_segments(
     window_ms: int,
     metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
 ) -> DataFrame:
-    """Windowed rollup straight from group segments: PMC members use
-    the closed-form splitting partials (pure JVM, shared with the
-    per-series path); dense members decode once with the group stride
-    and reduce per window (NumPy reduceat)."""
-    return _rollup_from_exploded(explode_group_segments(gseg, metrics), window_ms)
-
-
-def _rollup_from_exploded(exploded: DataFrame, window_ms: int) -> DataFrame:
-    """Shared rollup tail over an EXPLODED group-segment frame (per-
-    conversation or dimension-driven): analytic closed forms for
-    PMC/Swing members AND the strided dense decode run in ONE
-    mapInPandas pass (round 7 — the former analytic Catalyst branch
-    re-ran the whole group fit a second time), one final hash
-    aggregation."""
-    from modelardb_spark.operators.rollup import _analytic_partial_block
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full in batches:
-            if len(full) == 0:
-                continue
-            mt = full["mtid"].to_numpy()
-            frames = []
-            ana_m = (mt == MTID_PMC) | (mt == MTID_SWING)
-            if ana_m.any():
-                frames.append(
-                    _analytic_partial_block(full[ana_m], window_ms)
-                )
-            pdf = full[~ana_m]
-            if len(pdf):
-                member, n_ts, start, si = _decode_member_batch(pdf)
-                idx = np.arange(member.shape[1], dtype=np.int64)
-                mask = idx[None, :] < n_ts[:, None]
-                vals = member[mask]
-                ts = (start[:, None] + si[:, None] * idx[None, :])[mask]
-                seg_id = np.repeat(np.arange(len(pdf)), n_ts)
-                wins = (ts // window_ms) * window_ms
-                new = np.empty(vals.size, dtype=bool)
-                new[0] = True
-                new[1:] = (seg_id[1:] != seg_id[:-1]) | (wins[1:] != wins[:-1])
-                starts = np.flatnonzero(new)
-                counts = np.diff(np.concatenate((starts, [vals.size])))
-                frames.append(pd.DataFrame(
-                    {
-                        "conv_id": pdf["conv_id"].to_numpy()[seg_id[starts]],
-                        "metric": pdf["metric"].to_numpy()[seg_id[starts]],
-                        "window_ms": wins[starts],
-                        "cnt": counts.astype(np.int64),
-                        "vmin": np.minimum.reduceat(vals, starts),
-                        "vmax": np.maximum.reduceat(vals, starts),
-                        "vsum": np.add.reduceat(vals.astype(np.float64), starts),
-                    }
-                ))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    cols = [
-        "conv_id", "metric", "start_ms", "end_ms", "interval_ms",
-        "mtid", "model", "goff", "gsize", "p0", "p1",
-    ] + (["ukey"] if "ukey" in exploded.columns else [])
-    partials = exploded.select(*cols).mapInPandas(run, ROLLUP_SCHEMA)
-    return (
-        partials.groupBy("conv_id", "metric", "window_ms")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
-    )
+    """Windowed rollup straight from group segments: the explode, then
+    the per-series rollup tail (one fused partials pass whose decoder
+    strides the members, one merge; map-only at window == bin)."""
+    return rollup_from_segments(explode_group_segments(gseg, metrics), window_ms)
 
 
 def correlated_conversations(
@@ -964,8 +768,6 @@ def fit_segments_adaptive(
     e.g. the catalog root), which survives executor loss/preemption at
     the cost of one write+read of the bins-sized frame — the right
     setting on preemptible/spot clusters."""
-    from modelardb_spark.operators.fit import fit_segments_wide
-
     def _route(frame):
         return F.broadcast(frame) if broadcast_routing else frame
 
@@ -1016,27 +818,20 @@ def rollup_adaptive(
     window_ms: int,
     metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
 ) -> DataFrame:
-    """Rollup over an adaptive fit. The union is RE-AGGREGATED: with
-    per-day routing a conversation may sit in the group path on one
-    day and per-series on the next, so a window spanning a routing
-    boundary has partial rows in both branches; the merge (sum/min/max
-    are associative over disjoint point sets) is exact for every
-    window width, not just salt-aligned ones."""
-    from modelardb_spark.operators.rollup import rollup_from_segments
-
-    u = rollup_from_group_segments(gseg, window_ms, metrics).unionByName(
-        rollup_from_segments(pseg, window_ms)
+    """Rollup over an adaptive fit: the exploded group members and the
+    per-series segments (each a group of one) feed ONE partials pass
+    and one merge. With per-day routing a conversation may sit in the
+    group path on one day and per-series on the next, so a window
+    spanning a routing boundary has partial rows from both branches;
+    the merge (sum/min/max are associative over disjoint point sets) is
+    exact for every window width, not just salt-aligned ones."""
+    members = explode_group_segments(gseg, metrics).select(
+        *_PARTIAL_INPUT, "goff", "gsize"
     )
-    return (
-        u.groupBy("conv_id", "metric", "window_ms")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+    per_series = pseg.select(
+        *_PARTIAL_INPUT, F.lit(0).alias("goff"), F.lit(1).alias("gsize")
     )
+    return rollup_from_segments(members.unionByName(per_series), window_ms)
 
 
 def group_compression_stats(gseg: DataFrame) -> DataFrame:

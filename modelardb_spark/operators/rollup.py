@@ -4,13 +4,15 @@ reconstructing points where the model allows.
 This is the engine's headline capability, the Spark-first re-expression
 of the reference's 40 time-cube UDAFs + COUNT_S/MIN_S/MAX_S/SUM_S/AVG_S
 (SparkUDAF.scala:34-394, splitting engine Segment.cube,
-Segment.java:122-155). Instead of custom UDAFs, each segment is split
-at window boundaries with ``explode(sequence(...))`` and the per-
-(segment ∩ window) partial aggregate is a *closed-form column
-expression* for PMC/Swing segments — whole-stage-codegen'd, no Python —
-while Gorilla/raw segments take a vectorized `mapInPandas` decode path
-(NumPy ``reduceat`` per window). Catalyst's hash aggregation supplies
-the partial/final merge the reference hand-wrote as Aggregators.
+Segment.java:122-155). Instead of custom UDAFs, ONE `mapInPandas`
+pass (`_fused_partials`) emits the per-(segment ∩ window) partials of
+every segment in an Arrow batch: Gorilla/raw segments decode in
+lockstep and reduce per window (NumPy ``reduceat``); PMC/Swing
+segments split at window boundaries and take closed forms over the
+materialized model parameters (p0, p1), with no decode. Catalyst's
+hash aggregation (`_merge`) supplies the partial/final merge the
+reference hand-wrote as Aggregators. Group segments use the same tail
+after their explode: a per-series segment is a group of one.
 
 Counts are pure timestamp arithmetic ``(sub_end - sub_start)/interval
 + 1`` and therefore always exact (SparkUDAF.scala:34-55 semantics).
@@ -34,7 +36,7 @@ from pyspark.sql.types import (
 )
 
 from modelardb_spark.models import MTID_GORILLA, MTID_PMC, MTID_RAW, MTID_SWING
-from modelardb_spark.models.segment import decode_dense_matrix
+from modelardb_spark.operators.grid import _MEMBER_COLS, _decode_members
 
 MINUTE_MS = 60_000
 HOUR_MS = 3_600_000
@@ -52,93 +54,42 @@ ROLLUP_SCHEMA = StructType(
     ]
 )
 
-_PARTIAL_COLS = ["conv_id", "metric", "window_ms", "cnt", "vmin", "vmax", "vsum"]
+#: the segment columns the partials kernel reads (plus `_MEMBER_COLS`
+#: on exploded group members)
+_PARTIAL_INPUT = (
+    "conv_id", "metric", "start_ms", "end_ms", "interval_ms",
+    "mtid", "model", "p0", "p1",
+)
 
 
-def _analytic_partials(segments: DataFrame, window_ms: int) -> DataFrame:
-    """Closed-form per-(segment ∩ window) partials for PMC/Swing —
-    pure column expressions, no Python."""
-    w = F.lit(window_ms)
-    seg = segments.where(F.col("mtid").isin(MTID_PMC, MTID_SWING))
-    split = seg.select(
-        "conv_id",
-        "metric",
-        "mtid",
-        "p0",
-        "p1",
-        "start_ms",
-        "end_ms",
-        "interval_ms",
-        F.explode(
-            F.sequence(
-                (F.floor(F.col("start_ms") / w) * w).cast("long"),
-                (F.floor(F.col("end_ms") / w) * w).cast("long"),
-                w,
-            )
-        ).alias("window_ms"),
-    ).select(
-        "conv_id",
-        "metric",
-        "mtid",
-        "p0",
-        "p1",
-        "interval_ms",
-        "window_ms",
-        F.greatest("start_ms", "window_ms").alias("sub_start"),
-        F.least(
-            F.col("end_ms"), F.col("window_ms") + w - F.col("interval_ms")
-        ).alias("sub_end"),
-    )
-    cnt = ((F.col("sub_end") - F.col("sub_start")) / F.col("interval_ms") + 1).cast(
-        "long"
-    )
-    first = F.col("p0") * F.col("sub_start") + F.col("p1")
-    last = F.col("p0") * F.col("sub_end") + F.col("p1")
-    is_pmc = F.col("mtid") == MTID_PMC
-    # Swing min/max at the endpoints by slope sign, evaluated at float32
-    # like grid values (SwingFilterModelType.java:205-225); PMC constant
-    swing_min = (
-        F.when(F.col("p0") == 0, F.col("p1"))
-        .when(F.col("p0") > 0, first)
-        .otherwise(last)
-        .cast("float")
-    )
-    swing_max = (
-        F.when(F.col("p0") == 0, F.col("p1"))
-        .when(F.col("p0") < 0, first)
-        .otherwise(last)
-        .cast("float")
-    )
-    # Swing sum: trapezoid of the unrounded doubles (:227-233);
-    # PMC sum: cnt * constant (PMC_MeanModelType.java:133-135)
-    return split.select(
-        "conv_id",
-        "metric",
-        "window_ms",
-        cnt.alias("cnt"),
-        F.when(is_pmc, F.col("p0").cast("float")).otherwise(swing_min).alias("vmin"),
-        F.when(is_pmc, F.col("p0").cast("float")).otherwise(swing_max).alias("vmax"),
-        F.when(is_pmc, F.col("p0") * cnt)
-        .otherwise((first + last) / 2.0 * cnt)
-        .alias("vsum"),
+def _merge(
+    df: DataFrame, *keys, cols: tuple[str, str, str, str] = ("cnt", "vmin", "vmax", "vsum")
+) -> DataFrame:
+    """The cnt/min/max/sum merge (sum/min/max are associative over
+    disjoint point sets) plus the derived mean, grouped by `keys`."""
+    cnt, vmin, vmax, vsum = cols
+    return (
+        df.groupBy(*keys)
+        .agg(
+            F.sum(cnt).alias("cnt"),
+            F.min(vmin).alias("vmin"),
+            F.max(vmax).alias("vmax"),
+            F.sum(vsum).alias("vsum"),
+        )
+        .withColumn("mean", F.col("vsum") / F.col("cnt"))
     )
 
 
 def _dense_partial_block(pdf: pd.DataFrame, window_ms: int) -> pd.DataFrame:
     """Per-(segment ∩ window) partials for a batch of DENSE
-    (Gorilla/raw) segments: one lockstep decode + one reduceat family."""
-    n_seg = len(pdf)
-    start = pdf["start_ms"].to_numpy().astype(np.int64)
-    end = pdf["end_ms"].to_numpy().astype(np.int64)
-    si = pdf["interval_ms"].to_numpy().astype(np.int64)
-    lens = (end - start) // si + 1
-    mat = decode_dense_matrix(pdf["mtid"].to_numpy(), list(pdf["model"]), lens)
-    max_n = mat.shape[1]
-    idx = np.arange(max_n, dtype=np.int64)
+    (Gorilla/raw) segments or group members: one `_decode_members`
+    pass + one reduceat family."""
+    mat, lens, start, si = _decode_members(pdf)
+    idx = np.arange(mat.shape[1], dtype=np.int64)
     mask = idx[None, :] < lens[:, None]
     vals = mat[mask]
     ts = (start[:, None] + si[:, None] * idx[None, :])[mask]
-    seg_id = np.repeat(np.arange(n_seg), lens)
+    seg_id = np.repeat(np.arange(len(pdf)), lens)
     wins = (ts // window_ms) * window_ms
     new = np.empty(vals.size, dtype=bool)
     new[0] = True
@@ -162,10 +113,10 @@ def _dense_partial_block(pdf: pd.DataFrame, window_ms: int) -> pd.DataFrame:
 
 def _analytic_partial_block(pdf: pd.DataFrame, window_ms: int) -> pd.DataFrame:
     """Per-(segment ∩ window) partials for a batch of ANALYTIC
-    (PMC/Swing) segments — the NumPy replication of the
-    `_analytic_partials` column expressions, operation for operation on
-    the same float64/float32 arithmetic, so the partial rows are
-    bit-identical to the Catalyst closed forms:
+    (PMC/Swing) segments — the closed forms below, operation for
+    operation on the same float64/float32 arithmetic as their Catalyst
+    column-expression form (kept in tests/test_plans.py as the
+    reference this kernel is checked against):
 
       cnt  = long((sub_end - sub_start) / interval + 1)   [double div]
       PMC  : vmin = vmax = float32(p0);  vsum = p0 * cnt
@@ -218,12 +169,9 @@ def _analytic_partial_block(pdf: pd.DataFrame, window_ms: int) -> pd.DataFrame:
 
 
 def _fused_partials(segments: DataFrame, window_ms: int) -> DataFrame:
-    """ONE pass over ALL segments: dense decode partials AND the
-    PMC/Swing closed forms in the same mapInPandas kernel. The round-6
-    plan split segments into an analytic (Catalyst closed-form) branch
-    and a dense branch — each branch re-ran the whole upstream fit
-    kernel (the shuffle was shared via ReuseExchange, the post-shuffle
-    sort + fit were not), costing one extra fit per rollup query."""
+    """ONE mapInPandas pass over ALL segments (or exploded group
+    members): dense decode partials, then the PMC/Swing closed forms,
+    per Arrow batch."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -234,63 +182,35 @@ def _fused_partials(segments: DataFrame, window_ms: int) -> DataFrame:
             ana_m = (mt == MTID_PMC) | (mt == MTID_SWING)
             frames = []
             if dense_m.any():
-                frames.append(
-                    _dense_partial_block(pdf[dense_m], window_ms)
-                )
+                frames.append(_dense_partial_block(pdf[dense_m], window_ms))
             if ana_m.any():
-                frames.append(
-                    _analytic_partial_block(pdf[ana_m], window_ms)
-                )
+                frames.append(_analytic_partial_block(pdf[ana_m], window_ms))
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
     cols = segments.select(
-        "conv_id", "metric", "start_ms", "end_ms", "interval_ms",
-        "mtid", "model", "p0", "p1",
+        *_PARTIAL_INPUT, *[c for c in _MEMBER_COLS if c in segments.columns]
     )
     return cols.mapInPandas(run, ROLLUP_SCHEMA)
-
-
-def _dense_partials(segments: DataFrame, window_ms: int) -> DataFrame:
-    """Vectorized decode path for Gorilla/raw segments only (kept for
-    callers that split branches themselves)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield _dense_partial_block(pdf, window_ms)
-
-    dense = segments.where(F.col("mtid").isin(MTID_RAW, MTID_GORILLA)).select(
-        "conv_id", "metric", "start_ms", "end_ms", "interval_ms", "mtid", "model"
-    )
-    return dense.mapInPandas(run, ROLLUP_SCHEMA)
 
 
 def rollup_from_segments(
     segments: DataFrame, window_ms: int, interval_ms: int = MINUTE_MS
 ) -> DataFrame:
     """segments -> (conv_id, metric, window_ms, cnt, vmin, vmax, vsum,
-    mean).
+    mean). The shared rollup tail: it also takes exploded group members
+    (a per-series segment is a group of one).
 
     General case: one shuffle (the final groupBy) over map-side
     partials. When `window_ms == interval_ms` (the finest tier), every
     window is exactly one bin and therefore covered by exactly one
-    segment of its series — the groupBy is a semantic no-op and is
-    skipped entirely: the finest tier is a map-only job."""
+    segment (or group member segment) of its series — the groupBy is a
+    semantic no-op and is skipped entirely: the finest tier is a
+    map-only job."""
     partials = _fused_partials(segments, window_ms)
     if window_ms == interval_ms:
         return partials.withColumn("mean", F.col("vsum") / F.col("cnt"))
-    return (
-        partials.groupBy("conv_id", "metric", "window_ms")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
-    )
+    return _merge(partials, "conv_id", "metric", "window_ms")
 
 
 def rollup_cascade(finer: DataFrame, coarser_window_ms: int) -> DataFrame:
@@ -298,19 +218,11 @@ def rollup_cascade(finer: DataFrame, coarser_window_ms: int) -> DataFrame:
     re-aggregation, no segment access — the cascading maintenance path
     for the continuous-aggregate tables."""
     w = F.lit(coarser_window_ms)
-    return (
-        finer.groupBy(
-            "conv_id",
-            "metric",
-            (F.floor(F.col("window_ms") / w) * w).cast("long").alias("window_ms"),
-        )
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+    return _merge(
+        finer,
+        "conv_id",
+        "metric",
+        (F.floor(F.col("window_ms") / w) * w).cast("long").alias("window_ms"),
     )
 
 
@@ -343,16 +255,11 @@ def calendar_rollup(finer: DataFrame, field: str) -> DataFrame:
     expr = CALENDAR_FIELDS[field].replace(
         "ts", "timestamp_millis(window_ms)"
     )
-    return (
-        finer.withColumn("field", F.expr(expr).cast("int"))
-        .groupBy("conv_id", "metric", "field")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+    return _merge(
+        finer.withColumn("field", F.expr(expr).cast("int")),
+        "conv_id",
+        "metric",
+        "field",
     )
 
 
@@ -385,13 +292,6 @@ def segment_aggregates(segments: DataFrame) -> DataFrame:
     """Whole-series aggregates straight off the segment columns — the
     COUNT_S/MIN_S/MAX_S/SUM_S/AVG_S surface (SparkUDAF.scala:34-184)
     with zero reconstruction for every model type."""
-    return (
-        segments.groupBy("conv_id", "metric")
-        .agg(
-            F.sum("seg_cnt").alias("cnt"),
-            F.min("seg_min").alias("vmin"),
-            F.max("seg_max").alias("vmax"),
-            F.sum("seg_sum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+    return _merge(
+        segments, "conv_id", "metric", cols=("seg_cnt", "seg_min", "seg_max", "seg_sum")
     )

@@ -27,6 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modelardb_spark.operators.fit import _key_change, _stitched
 from modelardb_spark.operators.scanpar import fan_out
 
 
@@ -416,61 +417,32 @@ def embedding_near_dup(
             {"vec_a": np.minimum(a, b), "vec_b": np.maximum(a, b)}
         )
 
-    def prefilter_cells(batches):
-        """mapInPandas over rows sorted by cell key: per-cell blocks
-        split vectorized inside the task (a groupBy().applyInPandas
-        here paid ~1 ms of pandas overhead per cell — 2k+ cells at the
-        default LSH parameters made SMALL corpora slower than the
-        round-6 plan); an incomplete trailing cell carries into the
-        next Arrow batch."""
+    cell_keys = ("tbl", "bucket", "gi", "gj")
+
+    def prefilter_cells(pdf):
+        """Pairs of the whole cells in one stitched block of rows sorted
+        by cell key: per-cell blocks split vectorized inside the task
+        (a groupBy().applyInPandas here paid ~1 ms of pandas overhead
+        per cell — 2k+ cells at the default LSH parameters made SMALL
+        corpora slower than the round-6 plan)."""
         import pandas as pd
 
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            n = len(pdf)
-            if n == 0:
-                continue
-            t = pdf["tbl"].to_numpy()
-            bkt = pdf["bucket"].to_numpy()
-            gi = pdf["gi"].to_numpy()
-            gj = pdf["gj"].to_numpy()
-            change = np.zeros(n, dtype=bool)
-            if n > 1:
-                change[1:] = (
-                    (t[1:] != t[:-1])
-                    | (bkt[1:] != bkt[:-1])
-                    | (gi[1:] != gi[:-1])
-                    | (gj[1:] != gj[:-1])
-                )
-            bounds = np.flatnonzero(change)
-            if bounds.size == 0:
-                carry = pdf
-                continue
-            cut = bounds[-1]
-            carry = pdf.iloc[cut:]
-            head = pdf.iloc[:cut]
-            starts = np.concatenate(([0], bounds[bounds < cut]))
-            ends = np.concatenate((starts[1:], [cut]))
-            outs = []
-            for s, e in zip(starts, ends):
-                res = _cell_pairs(head.iloc[s:e])
-                if res is not None:
-                    outs.append(res)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-        if carry is not None and len(carry):
-            res = _cell_pairs(carry)
-            if res is not None:
-                yield res
+        cuts = np.flatnonzero(_key_change(pdf, cell_keys))
+        bounds = np.concatenate(([0], cuts, [len(pdf)]))
+        outs = [
+            res
+            for s, e in zip(bounds[:-1], bounds[1:])
+            if (res := _cell_pairs(pdf.iloc[s:e])) is not None
+        ]
+        return [pd.concat(outs, ignore_index=True)] if outs else []
 
     n_tasks = emb.sparkSession.sparkContext.defaultParallelism
     arranged = fanned.repartition(
-        n_tasks, F.pmod(F.xxhash64("tbl", "bucket", "gi", "gj"), F.lit(n_tasks))
-    ).sortWithinPartitions("tbl", "bucket", "gi", "gj")
-    pairs = arranged.mapInPandas(prefilter_cells, pair_schema).distinct()
+        n_tasks, F.pmod(F.xxhash64(*cell_keys), F.lit(n_tasks))
+    ).sortWithinPartitions(*cell_keys)
+    pairs = arranged.mapInPandas(
+        _stitched(cell_keys, prefilter_cells), pair_schema
+    ).distinct()
     base = with_norm(emb)
     a = base.select(
         F.col("vec_id").alias("vec_a"),

@@ -18,7 +18,8 @@ from modelardb_spark.operators.dimgroup import (
     fit_segments_dim_grouped,
     rollup_from_dim_group_segments,
 )
-from modelardb_spark.operators.rollup import HOUR_MS, MINUTE_MS
+from modelardb_spark.operators.fit import fit_segments
+from modelardb_spark.operators.rollup import HOUR_MS, MINUTE_MS, rollup_from_segments
 from modelardb_spark.operators.series import derive_series
 from modelardb_spark.operators.transcripts import transcripts_from_events
 
@@ -51,32 +52,42 @@ def test_dim_group_rollup_matches_raw(spark, series):
     dims = conversation_dimensions(series)
     members = dim_group_members(series, dims, by="channel", max_group_size=8)
     gseg = fit_segments_dim_grouped(series, members, CFG)
-    got = {
-        (r["conv_id"], r["metric"], r["window_ms"]): (
-            r["cnt"], float(r["vmin"]), float(r["vmax"]), round(r["vsum"], 6),
+    per_series = fit_segments(series, CFG)
+    for window_ms in (HOUR_MS, MINUTE_MS):
+        got_df = rollup_from_dim_group_segments(gseg, members, window_ms)
+        got = {
+            (r["conv_id"], r["metric"], r["window_ms"]): (
+                r["cnt"], float(r["vmin"]), float(r["vmax"]), round(r["vsum"], 6),
+            )
+            for r in got_df.collect()
+        }
+        raw = (
+            series.groupBy(
+                "conv_id",
+                "metric",
+                ((F.col("bin_ms") / window_ms).cast("long") * window_ms).alias(
+                    "window_ms"
+                ),
+            )
+            .agg(
+                F.count("*").alias("cnt"),
+                F.min("value").cast("double").alias("vmin"),
+                F.max("value").cast("double").alias("vmax"),
+                F.sum(F.col("value").cast("double")).alias("vsum"),
+            )
         )
-        for r in rollup_from_dim_group_segments(gseg, members, HOUR_MS).collect()
-    }
-    raw = (
-        series.groupBy(
-            "conv_id",
-            "metric",
-            ((F.col("bin_ms") / HOUR_MS).cast("long") * HOUR_MS).alias("window_ms"),
-        )
-        .agg(
-            F.count("*").alias("cnt"),
-            F.min("value").cast("double").alias("vmin"),
-            F.max("value").cast("double").alias("vmax"),
-            F.sum(F.col("value").cast("double")).alias("vsum"),
-        )
-    )
-    want = {
-        (r["conv_id"], r["metric"], r["window_ms"]): (
-            r["cnt"], r["vmin"], r["vmax"], round(r["vsum"], 6),
-        )
-        for r in raw.collect()
-    }
-    assert got == want
+        want = {
+            (r["conv_id"], r["metric"], r["window_ms"]): (
+                r["cnt"], r["vmin"], r["vmax"], round(r["vsum"], 6),
+            )
+            for r in raw.collect()
+        }
+        assert got == want, window_ms
+        # and exactly the per-series rollup of the same series
+        exact = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+        assert exact(got_df) == exact(
+            rollup_from_segments(per_series, window_ms)
+        ), window_ms
 
 
 def test_dim_group_wins_on_dense_aligned_members(spark):

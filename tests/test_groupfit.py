@@ -19,7 +19,12 @@ from modelardb_spark.operators.groupfit import (
     group_compression_stats,
     rollup_from_group_segments,
 )
-from modelardb_spark.operators.rollup import HOUR_MS, compression_stats
+from modelardb_spark.operators.rollup import (
+    HOUR_MS,
+    MINUTE_MS,
+    compression_stats,
+    rollup_from_segments,
+)
 from modelardb_spark.operators.series import derive_series_wide
 from modelardb_spark.operators.transcripts import transcripts_from_events
 
@@ -68,39 +73,93 @@ def test_group_grid_reconstructs_exactly(spark, wide, gseg):
     assert got == want
 
 
-def test_group_rollup_matches_raw(spark, wide, gseg):
-    raw = (
-        _narrow(wide)
-        .groupBy(
-            "conv_id",
-            "metric",
-            ((F.col("bin_ms") / HOUR_MS).cast("long") * HOUR_MS).alias("window_ms"),
+def _rollup_dict(df, exact=False):
+    return {
+        (r["conv_id"], r["metric"], r["window_ms"]): (
+            r["cnt"], float(r["vmin"]), float(r["vmax"]),
+            r["vsum"] if exact else round(r["vsum"], 6),
+        ) + ((r["mean"],) if exact else ())
+        for r in df.collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def per_series_seg(spark, wide):
+    p = fit_segments_wide(wide, CFG, METRICS).cache()
+    p.count()
+    return p
+
+
+def test_group_rollup_matches_raw(spark, wide, gseg, per_series_seg):
+    for window_ms in (HOUR_MS, MINUTE_MS):
+        raw = (
+            _narrow(wide)
+            .groupBy(
+                "conv_id",
+                "metric",
+                ((F.col("bin_ms") / window_ms).cast("long") * window_ms).alias(
+                    "window_ms"
+                ),
+            )
+            .agg(
+                F.count("*").alias("cnt"),
+                F.min("value").cast("double").alias("vmin"),
+                F.max("value").cast("double").alias("vmax"),
+                F.sum(F.col("value").cast("double")).alias("vsum"),
+            )
         )
-        .agg(
-            F.count("*").alias("cnt"),
-            F.min("value").cast("double").alias("vmin"),
-            F.max("value").cast("double").alias("vmax"),
-            F.sum(F.col("value").cast("double")).alias("vsum"),
-        )
+        got = rollup_from_group_segments(gseg, window_ms, METRICS)
+        assert _rollup_dict(raw) == _rollup_dict(got), window_ms
+        # and exactly the per-series rollup of the same series (the 1m
+        # tier is map-only on both sides)
+        assert _rollup_dict(got, exact=True) == _rollup_dict(
+            rollup_from_segments(per_series_seg, window_ms), exact=True
+        ), window_ms
+
+
+def test_adaptive_rollup_matches_per_series(spark):
+    """Per-day routing puts a conversation in the group path on the days
+    its metrics correlate and per-series on the others; the one-pass
+    rollup over both branches equals the per-series rollup of the same
+    series."""
+    from modelardb_spark.operators.groupfit import (
+        fit_segments_adaptive,
+        rollup_adaptive,
     )
-    got = rollup_from_group_segments(gseg, HOUR_MS, METRICS)
-    a = {
-        (r["conv_id"], r["metric"], r["window_ms"]): (
-            r["cnt"], r["vmin"], r["vmax"], round(r["vsum"], 6),
-        )
-        for r in raw.collect()
-    }
-    b = {
-        (r["conv_id"], r["metric"], r["window_ms"]): (
-            r["cnt"], float(r["vmin"]), float(r["vmax"]), round(r["vsum"], 6),
-        )
-        for r in got.collect()
-    }
-    assert a == b
+
+    rng = np.random.default_rng(3)
+    frames = []
+    for c in range(3):
+        for day in range(2):
+            n = 150
+            x = rng.integers(0, 9, n).astype(float)
+            correlated = (c + day) % 2 == 0
+            y = x + 1.0 if correlated else rng.integers(0, 9, n).astype(float)
+            y[rng.random(n) < 0.1] = np.nan  # gapped member
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "conv_id": f"c{c}",
+                        "bin_ms": day * 86_400_000 + 60_000 * np.arange(n),
+                        "turn_rate": x,
+                        "tool_usage": y,
+                    }
+                )
+            )
+    wide = spark.createDataFrame(pd.concat(frames, ignore_index=True)).withColumn(
+        "tool_usage", F.when(~F.isnan("tool_usage"), F.col("tool_usage"))
+    )
+    g, p = fit_segments_adaptive(wide, CFG, per_day=True)
+    assert g.count() > 0 and p.count() > 0  # both branches exercised
+    per_series = fit_segments_wide(wide, CFG, METRICS)
+    for window_ms in (HOUR_MS, MINUTE_MS):
+        got = rollup_adaptive(g, p, window_ms, METRICS)
+        want = rollup_from_segments(per_series, window_ms)
+        assert _rollup_dict(got, exact=True) == _rollup_dict(want, exact=True)
 
 
-def test_group_compression_beats_per_series(spark, wide, gseg):
-    per = fit_segments_wide(wide, CFG, METRICS)
+def test_group_compression_beats_per_series(spark, wide, gseg, per_series_seg):
+    per = per_series_seg
     per_bytes = compression_stats(per).agg(F.sum("stored_bytes")).first()[0]
     grp_bytes = group_compression_stats(gseg).agg(F.sum("stored_bytes")).first()[0]
     pts_per = compression_stats(per).agg(F.sum("points")).first()[0]

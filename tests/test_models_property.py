@@ -125,12 +125,6 @@ def test_group_fit_roundtrip_property(rows, gaps_between):
     0 both must cover every point exactly once with exact values."""
     import pandas as pd
 
-    from modelardb_spark.operators.groupfit import (
-        DYNAMIC_SPLIT_FRACTION,
-        _fit_group_batches,
-        decode_group_values,
-    )
-
     # build the wide frame with optional >1-bin jumps between rows
     bins = []
     cur = 0
@@ -150,13 +144,44 @@ def test_group_fit_roundtrip_property(rows, gaps_between):
     _roundtrip_group_paths(pdf, bins)
 
 
+def decode_group_values(
+    mtid: int,
+    model: bytes,
+    n_ts: int,
+    gsize: int,
+    goff: int,
+    start_ms: int = 0,
+    interval_ms: int = 1,
+) -> np.ndarray:
+    """Scalar reference decode of one group member: decode the
+    interleaved payload and stride by (goff, gsize). PMC is the shared
+    constant; Swing is the shared line float32(a*t + b), identical for
+    every member."""
+    from modelardb_spark.models import MTID_GORILLA, MTID_PMC, MTID_RAW, MTID_SWING
+    from modelardb_spark.models.pmc_mean import pmc_value
+    from modelardb_spark.models.swing import swing_decode
+    from modelardb_spark.models.uncompressed import raw_decode
+
+    if mtid == MTID_PMC:
+        return np.full(n_ts, pmc_value(model), dtype=np.float32)
+    if mtid == MTID_SWING:
+        a, b = swing_decode(model)
+        t = start_ms + interval_ms * np.arange(n_ts, dtype=np.float64)
+        return (a * t + b).astype(np.float32)
+    total = n_ts * gsize
+    if mtid == MTID_GORILLA:
+        return gorilla_decompress(model, total)[goff::gsize]
+    if mtid == MTID_RAW:
+        return raw_decode(model)[:total][goff::gsize]
+    raise ValueError(f"unsupported group mtid {mtid}")
+
+
 def _roundtrip_group_paths(pdf, bins):
     import pandas as pd
 
     from modelardb_spark.operators.groupfit import (
         DYNAMIC_SPLIT_FRACTION,
         _fit_group_batches,
-        decode_group_values,
     )
 
     for split_fraction in (None, DYNAMIC_SPLIT_FRACTION):
@@ -205,7 +230,6 @@ def test_dim_group_fit_roundtrip_property(rows):
     import pandas as pd
 
     from modelardb_spark.operators.dimgroup import _fit_dim_group_batches
-    from modelardb_spark.operators.groupfit import decode_group_values
 
     recs = []
     for i, vals in enumerate(rows):

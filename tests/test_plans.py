@@ -281,6 +281,96 @@ def test_duplicate_clusters_severs_lsh_lineage(spark, sf_small):
         assert marker not in plan_d, f"LSH lineage leaked into plan: {marker}"
 
 
+def _analytic_partials(segments, window_ms: int):
+    """Catalyst closed-form per-(segment ∩ window) partials for
+    PMC/Swing — pure column expressions, no Python. The reference the
+    fused kernel's NumPy closed forms are checked against."""
+    from modelardb_spark.models import MTID_PMC, MTID_SWING
+
+    w = F.lit(window_ms)
+    seg = segments.where(F.col("mtid").isin(MTID_PMC, MTID_SWING))
+    split = seg.select(
+        "conv_id",
+        "metric",
+        "mtid",
+        "p0",
+        "p1",
+        "start_ms",
+        "end_ms",
+        "interval_ms",
+        F.explode(
+            F.sequence(
+                (F.floor(F.col("start_ms") / w) * w).cast("long"),
+                (F.floor(F.col("end_ms") / w) * w).cast("long"),
+                w,
+            )
+        ).alias("window_ms"),
+    ).select(
+        "conv_id",
+        "metric",
+        "mtid",
+        "p0",
+        "p1",
+        "interval_ms",
+        "window_ms",
+        F.greatest("start_ms", "window_ms").alias("sub_start"),
+        F.least(
+            F.col("end_ms"), F.col("window_ms") + w - F.col("interval_ms")
+        ).alias("sub_end"),
+    )
+    cnt = ((F.col("sub_end") - F.col("sub_start")) / F.col("interval_ms") + 1).cast(
+        "long"
+    )
+    first = F.col("p0") * F.col("sub_start") + F.col("p1")
+    last = F.col("p0") * F.col("sub_end") + F.col("p1")
+    is_pmc = F.col("mtid") == MTID_PMC
+    # Swing min/max at the endpoints by slope sign, evaluated at float32
+    # like grid values (SwingFilterModelType.java:205-225); PMC constant
+    swing_min = (
+        F.when(F.col("p0") == 0, F.col("p1"))
+        .when(F.col("p0") > 0, first)
+        .otherwise(last)
+        .cast("float")
+    )
+    swing_max = (
+        F.when(F.col("p0") == 0, F.col("p1"))
+        .when(F.col("p0") < 0, first)
+        .otherwise(last)
+        .cast("float")
+    )
+    # Swing sum: trapezoid of the unrounded doubles (:227-233);
+    # PMC sum: cnt * constant (PMC_MeanModelType.java:133-135)
+    return split.select(
+        "conv_id",
+        "metric",
+        "window_ms",
+        cnt.alias("cnt"),
+        F.when(is_pmc, F.col("p0").cast("float")).otherwise(swing_min).alias("vmin"),
+        F.when(is_pmc, F.col("p0").cast("float")).otherwise(swing_max).alias("vmax"),
+        F.when(is_pmc, F.col("p0") * cnt)
+        .otherwise((first + last) / 2.0 * cnt)
+        .alias("vsum"),
+    )
+
+
+def _dense_partials(segments, window_ms: int):
+    """Gorilla/raw partials as a branch of their own (the two-branch
+    plan the fused kernel replaced)."""
+    from modelardb_spark.models import MTID_GORILLA, MTID_RAW
+    from modelardb_spark.operators.rollup import ROLLUP_SCHEMA, _dense_partial_block
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            yield _dense_partial_block(pdf, window_ms)
+
+    dense = segments.where(F.col("mtid").isin(MTID_RAW, MTID_GORILLA)).select(
+        "conv_id", "metric", "start_ms", "end_ms", "interval_ms", "mtid", "model"
+    )
+    return dense.mapInPandas(run, ROLLUP_SCHEMA)
+
+
 def test_fused_partials_match_branch_partials(spark):
     """The round-7 fused rollup kernel (dense decode + NumPy closed
     forms in one pass) must produce bit-identical partials to the
@@ -290,12 +380,7 @@ def test_fused_partials_match_branch_partials(spark):
     import numpy as np
 
     from modelardb_spark.models.gorilla import gorilla_compress
-    from modelardb_spark.operators.rollup import (
-        HOUR_MS,
-        _analytic_partials,
-        _dense_partials,
-        _fused_partials,
-    )
+    from modelardb_spark.operators.rollup import HOUR_MS, _fused_partials
 
     iv = 60_000
     base = 1_704_672_000_000
