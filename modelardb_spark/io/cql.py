@@ -210,7 +210,9 @@ def write_segments_cql(df: DataFrame, connection_string: str) -> None:
 class CqlCatalog(TableCatalog):
     """Embedded rendering of the Cassandra layout over local columnar
     files; same catalog protocol as TableCatalog/SnapshotCatalog/
-    JdbcCatalog, so ingest/transfer/maintain run unchanged over it."""
+    JdbcCatalog, so ingest/transfer/maintain run unchanged over it.
+    Writes keep the token-bucket layout and clustering order below; the
+    `order_by` of the catalog surface is ignored."""
 
     vnodes: int = DEFAULT_VNODES
     keyspace: str = "modelardb"
@@ -268,7 +270,11 @@ class CqlCatalog(TableCatalog):
         return df.sortWithinPartitions(*order)
 
     def overwrite(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
     ) -> None:
         parts = list(partition_by or [])
         (
@@ -280,7 +286,11 @@ class CqlCatalog(TableCatalog):
         )
 
     def append(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
     ) -> None:
         parts = list(partition_by or [])
         (
@@ -292,7 +302,11 @@ class CqlCatalog(TableCatalog):
         )
 
     def overwrite_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str],
+        order_by: tuple[str, ...] = (),
     ) -> None:
         """Partition-replace resume contract via staged rename-swap.
 

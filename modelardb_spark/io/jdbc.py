@@ -54,8 +54,9 @@ def _sql_lit(v) -> str:
 @dataclass
 class JdbcCatalog:
     """`root` is either a Derby database directory or a full ``jdbc:``
-    URL. `fmt` is accepted for factory-surface compatibility and
-    ignored (the wire format is the database's)."""
+    URL. `fmt` and the writes' `order_by` are accepted for
+    catalog-surface compatibility and ignored (the wire format and the
+    row order are the database's)."""
 
     root: str
     fmt: str = "jdbc"
@@ -203,18 +204,30 @@ class JdbcCatalog:
                 raise
 
     def overwrite(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
     ) -> None:
         self._write(df, name, "overwrite")
         self._ensure_index(name, df)
 
     def append(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
     ) -> None:
         self._write(df, name, "append")
 
     def overwrite_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str],
+        order_by: tuple[str, ...] = (),
     ) -> None:
         """Atomic dynamic partition overwrite: stage the incoming rows
         in `{name}_stage` (executor-parallel JDBC write, scratch data —

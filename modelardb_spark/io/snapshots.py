@@ -68,6 +68,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from modelardb_spark.io.tables import clustered
+
 _META = "meta"
 _DATA = "data"
 _MANIFESTS = "manifests"
@@ -192,14 +194,22 @@ class SnapshotCatalog:
         return out
 
     # --------------------------------------------------------------- commit
-    def _write_files(self, df: DataFrame, name: str, partition_by: list[str] | None):
-        """Write one commit's immutable data directory and its
-        partition-pure manifest files; returns the new manifest-list
-        rows. Only this commit's own files are walked — cost is
-        O(files written), independent of table size."""
+    def _write_files(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None,
+        order_by: tuple[str, ...] = (),
+    ):
+        """Write one commit's immutable data directory (one file per
+        partition value, `io.tables.clustered`) and its partition-pure
+        manifest files; returns the new manifest-list rows. Only this
+        commit's own files are walked — cost is O(files written),
+        independent of table size."""
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         target = os.path.join(self._data(name), commit)
-        w = df.write.mode("errorifexists").format(self.fmt)
+        w = clustered(df, partition_by, order_by).write.mode("errorifexists")
+        w = w.format(self.fmt)
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(target)
@@ -324,8 +334,9 @@ class SnapshotCatalog:
         partition_by: list[str] | None,
         delta_with,
         check_schema: bool = True,
+        order_by: tuple[str, ...] = (),
     ) -> int:
-        new_rows = self._write_files(df, name, partition_by)
+        new_rows = self._write_files(df, name, partition_by, order_by)
         return self._commit(
             name,
             op,
@@ -336,22 +347,35 @@ class SnapshotCatalog:
 
     # ------------------------------------------------- TableCatalog surface
     def overwrite(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
     ) -> None:
         self._commit_write(
             df, name, "overwrite", partition_by, lambda base, new: new,
-            check_schema=False,
+            check_schema=False, order_by=order_by,
         )
 
     def append(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
     ) -> None:
         self._commit_write(
-            df, name, "append", partition_by, lambda base, new: base + new
+            df, name, "append", partition_by, lambda base, new: base + new,
+            order_by=order_by,
         )
 
     def overwrite_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str],
+        order_by: tuple[str, ...] = (),
     ) -> None:
         """Dynamic partition overwrite as ONE atomic commit: partitions
         present in `df` are replaced, all others are untouched — and a
@@ -365,7 +389,10 @@ class SnapshotCatalog:
             kept = [m for m in base if _pkey(m["partition"]) not in replaced]
             return kept + new
 
-        self._commit_write(df, name, "overwrite_partitions", partition_by, delta)
+        self._commit_write(
+            df, name, "overwrite_partitions", partition_by, delta,
+            order_by=order_by,
+        )
 
     def drop_partitions(self, name: str, column: str, values: list) -> int:
         """Metadata-only commit (Iceberg `DELETE WHERE part = v`): no
@@ -568,13 +595,12 @@ class SnapshotCatalog:
         self, spark: SparkSession, name: str, partition_by: list[str]
     ) -> int:
         """Compaction (Iceberg rewrite_data_files): rewrite the current
-        snapshot as one file per partition in ONE commit; concurrent
-        appends that land first win the race and this rewrite rebases —
-        but to keep the semantics trivially safe it re-reads and fully
-        replaces, so run it from the maintenance path like Iceberg's
-        procedure."""
-        df = self.read(spark, name).repartition(*partition_by)
-        self.overwrite(df, name, partition_by)
+        snapshot as one file per partition (the writer's own
+        distribution) in ONE commit; concurrent appends that land first
+        win the race and this rewrite rebases — but to keep the
+        semantics trivially safe it re-reads and fully replaces, so run
+        it from the maintenance path like Iceberg's procedure."""
+        self.overwrite(self.read(spark, name), name, partition_by)
         return self.current_version(name)
 
 

@@ -45,8 +45,27 @@ MODEL_TYPES: list[tuple[int, str]] = [
 
 
 def model_type_table(spark: SparkSession) -> DataFrame:
-    """The `model_type` metadata table (mtid -> implementation name)."""
-    return spark.createDataFrame(MODEL_TYPES, "mtid INT, name STRING")
+    """The `model_type` metadata table (mtid -> implementation name), a
+    JVM local relation (no Python-side rows). The filtered NULL row
+    keeps both columns nullable, as a schema-string frame has them."""
+    rows = ", ".join(f"({mtid}, '{name}')" for mtid, name in MODEL_TYPES)
+    return spark.sql(
+        f"SELECT * FROM VALUES {rows}, (CAST(NULL AS INT), CAST(NULL AS STRING))"
+        " AS t(mtid, name) WHERE mtid IS NOT NULL"
+    )
+
+
+def clustered(
+    df: DataFrame, partition_by: list[str] | None, order_by: tuple[str, ...] = ()
+) -> DataFrame:
+    """The write distribution and order of a partitioned table: rows of
+    one partition value go to one task (one file), sorted by
+    `order_by` within it. Unpartitioned writes keep their layout."""
+    if not partition_by:
+        return df
+    return df.hint("rebalance", *partition_by).sortWithinPartitions(
+        *partition_by, *order_by
+    )
 
 
 def with_part_key(df: DataFrame, buckets: int = 32) -> DataFrame:
@@ -76,28 +95,45 @@ class TableCatalog:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.format(self.fmt).load(self.path(name))
 
-    def overwrite(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("overwrite")
+    def overwrite(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
+    ) -> None:
+        w = clustered(df, partition_by, order_by).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.format(self.fmt).save(self.path(name))
 
     def overwrite_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str],
+        order_by: tuple[str, ...] = (),
     ) -> None:
         """Dynamic partition overwrite: replaces only the partitions
         present in `df` (Iceberg's per-partition replace semantics;
         idempotent re-runs)."""
         (
-            df.write.mode("overwrite")
+            clustered(df, partition_by, order_by)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
             .format(self.fmt)
             .save(self.path(name))
         )
 
-    def append(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
+    def append(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        order_by: tuple[str, ...] = (),
+    ) -> None:
+        w = clustered(df, partition_by, order_by).write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.format(self.fmt).save(self.path(name))

@@ -129,17 +129,26 @@ def ingest(
                 fit_segments_from_transcripts(part, cfg), cfg.conv_buckets
             )
         segments = segments.persist()
-        seg_rows = segments.count()
+        # the per-day checkpoint stats are the action that materializes
+        # the persisted segments; "n" counts stored values on both the
+        # per-series and the group segment schemas (group seg_cnt is a
+        # per-member array)
+        per_day = segments.groupBy("part_day").agg(
+            F.count("*").alias("segs"), F.sum("n").alias("points")
+        )
+        stats = {str(r["part_day"]): r for r in per_day.collect()}
+        seg_rows = sum(int(r["segs"]) for r in stats.values())
         # sort within files so parquet row-group min/max stats prune by
         # model type, conversation, and time (Iceberg analogue:
         # write-ordered-by)
         catalog.overwrite_partitions(
-            segments.sortWithinPartitions("mtid", "conv_id", "start_ms"),
+            segments,
             "segments",
             ["part_day"],
+            order_by=("mtid", "conv_id", "start_ms"),
         )
 
-        # 1m tier is map-only (window == bin) and written straight out;
+        # 1m tier is map-only when the bin is one minute (window == bin);
         # 1h comes from the compressed segments (small shuffle);
         # 1d cascades from 1h — point-sized data is never re-shuffled
         if grouped:
@@ -148,10 +157,14 @@ def ingest(
             )
 
             def _tier(window_ms):
-                return rollup_from_group_segments(segments, window_ms)
+                return rollup_from_group_segments(
+                    segments, window_ms, interval_ms=cfg.interval_ms
+                )
         else:
             def _tier(window_ms):
-                return rollup_from_segments(segments, window_ms)
+                return rollup_from_segments(
+                    segments, window_ms, interval_ms=cfg.interval_ms
+                )
         r1m = _tier(MINUTE_MS).withColumn(
             "part_day", (F.col("window_ms") / DAY_MS).cast("long")
         )
@@ -166,12 +179,6 @@ def ingest(
         catalog.overwrite_partitions(r1d, "rollup_1d", ["part_day"])
 
         wall_ms = int((time.time() - t0) * 1000)
-        # "n" counts stored values on both the per-series and the
-        # group segment schemas (group seg_cnt is a per-member array)
-        per_day = segments.groupBy("part_day").agg(
-            F.count("*").alias("segs"), F.sum("n").alias("points")
-        )
-        stats = {str(r["part_day"]): r for r in per_day.collect()}
         for d in chunk:
             r = stats.get(str(d))
             ckpt.record(

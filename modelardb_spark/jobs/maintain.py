@@ -11,7 +11,7 @@ concern, storage/FileStorage.scala:320-351):
   metadata-only delete commits, or SQL DELETEs on JDBC.
 - `--compact`: rewrite each table to one file per partition (snapshot
   catalog: an atomic rewrite commit; directory catalog: dynamic
-  partition overwrite of the coalesced frame).
+  partition overwrite of the re-read frame).
 - `--expire-keep N`: snapshot catalog only — drop all but the newest N
   manifests and garbage-collect unreferenced data files.
 
@@ -39,7 +39,9 @@ def compact_tables(
     """One file per partition for each existing table. On the snapshot
     catalog this is `rewrite_data_files` (atomic commit + old files
     reclaimable via expiry); on the directory/JDBC catalogs it is a
-    partition-preserving rewrite through the catalog's own overwrite."""
+    partition-preserving rewrite through the catalog's own overwrite.
+    The catalog's writer places each partition value in one file
+    (`io.tables.clustered`), so no repartition happens here."""
     from modelardb_spark.io.snapshots import SnapshotCatalog
 
     out = {}
@@ -49,9 +51,10 @@ def compact_tables(
         if isinstance(catalog, SnapshotCatalog):
             out[table] = catalog.rewrite_data_files(spark, table, ["part_day"])
         else:
-            df = catalog.read(spark, table).repartition("part_day")
             catalog.overwrite_partitions(
-                df.localCheckpoint(eager=True), table, ["part_day"]
+                catalog.read(spark, table).localCheckpoint(eager=True),
+                table,
+                ["part_day"],
             )
             out[table] = 1
     return out

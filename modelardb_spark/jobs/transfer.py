@@ -182,11 +182,10 @@ def transfer_segments(
         # localCheckpoint breaks the read->overwrite lineage so Spark
         # does not scan files it is about to replace
         dst.overwrite_partitions(
-            merged.localCheckpoint(eager=True).sortWithinPartitions(
-                "mtid", "conv_id", "start_ms"
-            ),
+            merged.localCheckpoint(eager=True),
             table,
             ["part_day"],
+            order_by=("mtid", "conv_id", "start_ms"),
         )
         wall_ms = int((time.time() - t0) * 1000)
         per_day = {

@@ -99,6 +99,40 @@ def segment_grid(
     return ts, decode_values(mtid, model, start_ms, end_ms, interval_ms)
 
 
+def model_params(
+    mtids: np.ndarray, models: list[bytes]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decoded model parameters per segment row, as the fit stores them
+    in (p0, p1): PMC (constant, NaN), Swing (slope a, intercept b),
+    NaN for the dense model types. PMC constants decode as one
+    big-endian frombuffer; Swing pairs per serialized width (8/12/16 B,
+    swing_model)."""
+    mtids = np.asarray(mtids, dtype=np.int64)
+    p0 = np.full(mtids.size, np.nan)
+    p1 = np.full(mtids.size, np.nan)
+    pmc = np.flatnonzero(mtids == MTID_PMC)
+    if pmc.size:
+        p0[pmc] = np.frombuffer(
+            b"".join(models[i] for i in pmc), dtype=">f4"
+        ).astype(np.float64)
+    sw = np.flatnonzero(mtids == MTID_SWING)
+    if sw.size:
+        widths = np.array([len(models[i]) for i in sw], dtype=np.int64)
+        for width, dt in (
+            (8, np.dtype([("a", ">f4"), ("b", ">f4")])),
+            (12, np.dtype([("a", ">f4"), ("b", ">f8")])),
+            (16, np.dtype([("a", ">f8"), ("b", ">f8")])),
+        ):
+            sel = sw[widths == width]
+            if sel.size:
+                rec = np.frombuffer(
+                    b"".join(models[i] for i in sel), dtype=dt
+                )
+                p0[sel] = rec["a"].astype(np.float64)
+                p1[sel] = rec["b"].astype(np.float64)
+    return p0, p1
+
+
 def segment_agg_batch(
     mtids: np.ndarray,
     models: list[bytes],
@@ -108,10 +142,9 @@ def segment_agg_batch(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized `segment_agg` over a batch of segment rows: returns
     (counts, mins, maxs, sums) arrays, bit-identical per row to the
-    scalar path. PMC constants decode as one big-endian frombuffer;
-    Swing (a, b) pairs decode per serialized width (8/12/16 B,
-    swing_model) with the closed-form endpoint min/max and trapezoid
-    sum; the dense rest (Gorilla/raw) is ONE `decode_dense_matrix`
+    scalar path (dense sums up to <1 ulp, see below). PMC and Swing
+    take closed forms over `model_params` (endpoint min/max, trapezoid
+    sum); the dense rest (Gorilla/raw) is ONE `decode_dense_matrix`
     lockstep call. This is the Arrow-batch body of the registered
     COUNT_S..AVG_S SQL aggregates (SparkUDAF.scala:34-184) — no
     per-segment Python loop."""
@@ -124,33 +157,19 @@ def segment_agg_batch(
     mins = np.empty(n, dtype=np.float64)
     maxs = np.empty(n, dtype=np.float64)
     sums = np.empty(n, dtype=np.float64)
+    p0, p1 = model_params(mtids, models)
 
     pmc = np.flatnonzero(mtids == MTID_PMC)
     if pmc.size:
-        c = np.frombuffer(
-            b"".join(models[i] for i in pmc), dtype=">f4"
-        ).astype(np.float64)
+        c = p0[pmc]
         mins[pmc] = c
         maxs[pmc] = c
         sums[pmc] = c * counts[pmc]
 
     sw = np.flatnonzero(mtids == MTID_SWING)
     if sw.size:
-        a = np.empty(sw.size, dtype=np.float64)
-        b = np.empty(sw.size, dtype=np.float64)
-        widths = np.array([len(models[i]) for i in sw], dtype=np.int64)
-        for width, dt in (
-            (8, np.dtype([("a", ">f4"), ("b", ">f4")])),
-            (12, np.dtype([("a", ">f4"), ("b", ">f8")])),
-            (16, np.dtype([("a", ">f8"), ("b", ">f8")])),
-        ):
-            sel = np.flatnonzero(widths == width)
-            if sel.size:
-                rec = np.frombuffer(
-                    b"".join(models[sw[i]] for i in sel), dtype=dt
-                )
-                a[sel] = rec["a"].astype(np.float64)
-                b[sel] = rec["b"].astype(np.float64)
+        a = p0[sw]
+        b = p1[sw]
         first = a * starts[sw] + b
         last = a * ends[sw] + b
         f32_first = first.astype(np.float32).astype(np.float64)

@@ -77,7 +77,11 @@ from modelardb_spark.models.swing import swing_minmax, swing_model, swing_sum
 from modelardb_spark.models.uncompressed import raw_model
 from modelardb_spark.operators.fit import _arrange, _stitched, fit_segments_wide
 from modelardb_spark.operators.grid import grid
-from modelardb_spark.operators.rollup import _PARTIAL_INPUT, rollup_from_segments
+from modelardb_spark.operators.rollup import (
+    _PARTIAL_INPUT,
+    MINUTE_MS,
+    rollup_from_segments,
+)
 
 GROUP_SEGMENT_SCHEMA = StructType(
     [
@@ -679,11 +683,15 @@ def rollup_from_group_segments(
     gseg: DataFrame,
     window_ms: int,
     metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
+    interval_ms: int = MINUTE_MS,
 ) -> DataFrame:
     """Windowed rollup straight from group segments: the explode, then
     the per-series rollup tail (one fused partials pass whose decoder
-    strides the members, one merge; map-only at window == bin)."""
-    return rollup_from_segments(explode_group_segments(gseg, metrics), window_ms)
+    strides the members, one merge; map-only when `window_ms` equals
+    the bin width `interval_ms`)."""
+    return rollup_from_segments(
+        explode_group_segments(gseg, metrics), window_ms, interval_ms
+    )
 
 
 def correlated_conversations(

@@ -5,23 +5,29 @@ reference-style SQL over the `segments` view runs verbatim
 
 Execution shape:
 
-- the *_S aggregates compute from the MODEL (closed form for
-  PMC/Swing, decode for Gorilla/raw), not from pre-materialized
-  statistics, so they work on any segment frame regardless of which
-  extra columns were kept. Two execution paths:
-  (a) `segment_sql` (the engine's SQL entry point — query server,
-      driver surface) REWRITES each *_S call into a built-in aggregate
-      over a per-segment scalar partial — COUNT_S becomes pure-SQL
-      arithmetic, MIN_S/MAX_S/SUM_S/AVG_S become MIN/MAX/SUM over the
-      Arrow-batched SEG_AGG scalar UDF — so Catalyst plans a true
-      partial/final decomposition (map-side partial below the
-      exchange, like the reference's Aggregators,
-      SparkUDAF.scala:37-51): only (key, partial) rows shuffle, never
-      the segment/model rows of a group.
-  (b) the registered names also work in raw `spark.sql` as Arrow-
-      batched pandas grouped-agg UDFs (complete-mode: Spark ships each
-      group to one task) — kept for direct-session compatibility;
-      bounded by segment counts, but prefer `segment_sql`.
+- `segment_sql` (the engine's SQL entry point — query server, Flight,
+  `__spark_entry__` queries) rewrites every *_S call into built-in
+  aggregates, so Catalyst plans a true partial/final decomposition
+  (map-side partial below the exchange, like the reference's
+  Aggregators, SparkUDAF.scala:37-51): only (key, partial) rows
+  shuffle, never the segment/model rows of a group.
+  (a) `#` means the whole segment, whose answers the fit already
+      stored (`seg_cnt/seg_min/seg_max/seg_sum`, operators/fit.py), so
+      `AGG_S(#)` reads those columns: MIN/MAX/SUM over them, AVG as
+      SUM(seg_sum) / SUM(seg_cnt), COUNT_S as pure-SQL arithmetic. No
+      model is decoded and no Python runs. `register_views` guarantees
+      the four columns on the `segments` view (a source without them,
+      such as the Flight wire schema, gets them from SEG_AGG there).
+  (b) explicit argument lists — typically a restriction such as
+      ``MIN_S(mtid, model, START(...), END(...), interval_ms)`` —
+      compute from the MODEL (closed form for PMC/Swing, decode for
+      Gorilla/raw) through the Arrow-batched SEG_AGG scalar UDF: one
+      per-segment (cnt, vmin, vmax, vsum) partial, merged by built-in
+      MIN/MAX/SUM. COUNT_S is pure-SQL arithmetic here too.
+- the registered names also work in raw `spark.sql` as Arrow-batched
+  pandas grouped-agg UDFs (complete-mode: Spark ships each group to
+  one task) — kept for direct-session compatibility; bounded by
+  segment counts, but prefer `segment_sql`.
 - START / END / START_END are pure SQL scalar functions (CREATE
   TEMPORARY FUNCTION ... RETURN <expr>): they stay inside whole-stage
   codegen, no Python. The rounding arithmetic is cloned from
@@ -41,7 +47,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
-from modelardb_spark.models.segment import segment_agg_batch
+from modelardb_spark.models.segment import model_params, segment_agg_batch
 
 
 def _seg_agg_arrays(mtid, model, start, end, si):
@@ -113,6 +119,18 @@ def _make_seg_agg_udf():
         )
 
     return seg_agg
+
+
+def _make_seg_params_udf():
+    """Scalar pandas UDF: one segment row -> its decoded model
+    parameters (p0, p1), as the fit stores them (`model_params`)."""
+
+    @pandas_udf("p0 double, p1 double")
+    def seg_params(mtid: pd.Series, model: pd.Series) -> pd.DataFrame:
+        p0, p1 = model_params(mtid.to_numpy(), [bytes(m) for m in model])
+        return pd.DataFrame({"p0": p0, "p1": p1})
+
+    return seg_params
 
 
 def _split_top_args(argstr: str) -> list[str]:
@@ -220,25 +238,32 @@ def decompose_segment_aggregates(sql: str) -> str:
 
 
 #: the reference's `#` query sugar (engines/EngineUtilities.scala /
-#: SparkUDAF usage): `AGG_S(#)` expands to the full segment column
-#: list. Our per-series segment rows are self-describing, so the
-#: expansion is the model-bearing column tuple.
+#: SparkUDAF usage): `AGG_S(#)` aggregates whole segments. COUNT_S
+#: expands to the (start, end, interval) triple; the others read the
+#: aggregates the fit stored per segment.
 _SUGAR_COUNT = "start_ms, end_ms, interval_ms"
-_SUGAR_FULL = "mtid, model, start_ms, end_ms, interval_ms"
+_SUGAR_STORED = {
+    "MIN_S": "MIN(CAST(seg_min AS DOUBLE))",
+    "MAX_S": "MAX(CAST(seg_max AS DOUBLE))",
+    "SUM_S": "SUM(seg_sum)",
+    "AVG_S": "(SUM(seg_sum) / SUM(seg_cnt))",
+}
 
 
 def expand_segment_sugar(sql: str) -> str:
     """Expand the reference's `#` argument sugar so queries like
     ``SELECT MIN_S(#) FROM segments`` run verbatim: `COUNT_S(#)` ->
     the (start, end, interval) triple; `MIN_S/MAX_S/SUM_S/AVG_S(#)` ->
-    the full model-bearing column list (the reference expands `#` to
-    the segment view's columns the same way)."""
+    built-in aggregates over the stored `seg_*` columns, equal to the
+    SEG_AGG results over the whole segments (a dense segment's stored
+    sum follows the scalar `segment_agg`, which SEG_AGG's batched sum
+    matches to <1 ulp)."""
     import re
 
     out = re.sub(r"\bCOUNT_S\s*\(\s*#\s*\)", f"COUNT_S({_SUGAR_COUNT})", sql)
     return re.sub(
         r"\b(MIN_S|MAX_S|SUM_S|AVG_S)\s*\(\s*#\s*\)",
-        lambda m: f"{m.group(1)}({_SUGAR_FULL})",
+        lambda m: _SUGAR_STORED[m.group(1)],
         out,
     )
 

@@ -177,9 +177,10 @@ def compact_stream_segments(
     n_batches = len(catalog.list_partitions(table, "batch_id"))
     tmp = f"{table}__compact_tmp"
     catalog.overwrite(
-        df.drop("batch_id").sortWithinPartitions("mtid", "conv_id", "start_ms"),
+        df.drop("batch_id"),
         tmp,
         ["part_day"],
+        order_by=("mtid", "conv_id", "start_ms"),
     )
     src, dst = catalog.path(table), catalog.path(tmp)
     old = catalog.path(f"{table}__pre_compact")

@@ -159,7 +159,8 @@ def test_segment_sql_aggregates_decompose_partial_final(spark, sf_small, tmp_pat
     HashAggregate pair (map-side partials below the exchange, like the
     reference's Aggregators, SparkUDAF.scala:37-51), with ONE deduped
     ArrowEvalPython evaluation and no complete-mode AggregateInPandas
-    shipping a group's segment rows to one task."""
+    shipping a group's segment rows to one task. (Explicit arguments:
+    the `#` sugar reads the stored aggregates and runs no UDF.)"""
     from modelardb_spark.operators.sqlfunctions import (
         register_sql_functions,
         segment_sql,
@@ -172,11 +173,13 @@ def test_segment_sql_aggregates_decompose_partial_final(spark, sf_small, tmp_pat
     seg.write.parquet(p)
     spark.read.parquet(p).createOrReplaceTempView("segments")
     register_sql_functions(spark)
+    args = "mtid, model, start_ms, end_ms, interval_ms"
     df = segment_sql(
         spark,
-        """
-        SELECT conv_id, COUNT_S(#) AS cnt, MIN_S(#) AS vmin,
-               MAX_S(#) AS vmax, SUM_S(#) AS vsum, AVG_S(#) AS mean
+        f"""
+        SELECT conv_id, COUNT_S(start_ms, end_ms, interval_ms) AS cnt,
+               MIN_S({args}) AS vmin, MAX_S({args}) AS vmax,
+               SUM_S({args}) AS vsum, AVG_S({args}) AS mean
         FROM segments GROUP BY conv_id
         """,
     )
@@ -244,7 +247,8 @@ def test_avg_s_alone_dedupes_its_two_seg_agg_occurrences(spark, sf_small, tmp_pa
     register_sql_functions(spark)
     df = segment_sql(
         spark,
-        "SELECT conv_id, AVG_S(#) AS mean FROM segments GROUP BY conv_id",
+        "SELECT conv_id, AVG_S(mtid, model, start_ms, end_ms, interval_ms) "
+        "AS mean FROM segments GROUP BY conv_id",
     )
     plan = _plan(df)
     assert plan.count("SEG_AGG") == 1, plan

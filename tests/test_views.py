@@ -3,6 +3,7 @@ must agree with the raw series."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from modelardb_spark.operators.fit import fit_segments
@@ -145,8 +146,11 @@ def test_segment_sugar_expansion(spark):
         expand_segment_sugar("SELECT COUNT_S(#) FROM segments")
         == "SELECT COUNT_S(start_ms, end_ms, interval_ms) FROM segments"
     )
-    assert "MIN_S(mtid, model, start_ms, end_ms, interval_ms)" in expand_segment_sugar(
-        "SELECT MIN_S( # ) FROM segments"
+    assert expand_segment_sugar(
+        "SELECT MIN_S( # ), AVG_S(#) FROM segments"
+    ) == (
+        "SELECT MIN(CAST(seg_min AS DOUBLE)), (SUM(seg_sum) / SUM(seg_cnt)) "
+        "FROM segments"
     )
 
     t = synthetic_transcripts(spark, n_convs=4, turns_per_conv=100, mega_convs=0)
@@ -183,3 +187,66 @@ def test_decompose_skips_literals_and_validates_arity():
     # quote-escaped literal ('' inside '...') stays a literal
     s2 = "SELECT 'it''s SUM_S(x)' FROM t"
     assert decompose_segment_aggregates(s2) == s2
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("error_bound", [0.0, 5.0])
+def test_stored_aggregate_sugar_equals_seg_agg(spark, sf_small, tmp_path, error_bound):
+    """`AGG_S(#)` reads the fit-time aggregate columns: no Python runs,
+    and per (conv_id, metric) the answer has the same bits as SEG_AGG
+    over the explicit model arguments — over fit output and over a
+    view of the 7 Flight wire columns, whose view computes the columns
+    (and prunes that UDF from a query that reads none of them) and the
+    model parameters of the point view."""
+    from modelardb_spark.config import EngineConfig
+    from modelardb_spark.operators.fit import fit_segments_wide
+    from modelardb_spark.operators.series import derive_series_wide
+    from modelardb_spark.operators.sqlfunctions import (
+        register_sql_functions,
+        segment_sql,
+    )
+    from modelardb_spark.operators.transcripts import transcripts_from_events
+    from modelardb_spark.remote.flight import SEGMENT_WIRE_SCHEMA
+
+    seg = fit_segments_wide(
+        derive_series_wide(transcripts_from_events(spark, sf_small)),
+        EngineConfig(error_bound=error_bound),
+    )
+    p = str(tmp_path / "seg")
+    # each (conv_id, metric) in one file: a group's doubles then add up
+    # in the same order under both plans
+    seg.repartition("conv_id", "metric").write.parquet(p)
+    stored = spark.read.parquet(p)
+    args = "mtid, model, start_ms, end_ms, interval_ms"
+    explicit = (
+        f"COUNT_S(start_ms, end_ms, interval_ms) AS cnt, MIN_S({args}) AS vmin, "
+        f"MAX_S({args}) AS vmax, SUM_S({args}) AS vsum, AVG_S({args}) AS vavg"
+    )
+    sugar = ("COUNT_S(#) AS cnt, MIN_S(#) AS vmin, MAX_S(#) AS vmax, "
+             "SUM_S(#) AS vsum, AVG_S(#) AS vavg")
+
+    def run(src, aggs, select="conv_id, metric, ", group=" GROUP BY conv_id, metric"):
+        register_views(spark, src)
+        register_sql_functions(spark)
+        df = segment_sql(spark, f"SELECT {select}{aggs} FROM segments{group}")
+        return _plan(df), sorted(map(tuple, df.collect()))
+
+    plan, want = run(stored, explicit)
+    assert "ArrowEvalPython" in plan
+    plan, got = run(stored, sugar)
+    assert "ArrowEvalPython" not in plan, plan
+    assert got == want
+    wire = stored.select(*SEGMENT_WIRE_SCHEMA.names)
+    assert run(wire, sugar)[1] == want
+    plan, total = run(wire, "COUNT_S(#) AS cnt", select="", group="")
+    assert "ArrowEvalPython" not in plan, plan
+    assert total == [(sum(r[2] for r in want),)]
+    # the wire view also decodes the model parameters the point view reads
+    points = "SELECT conv_id, metric, bin_ms, value FROM data_points"
+    wire_points = sorted(map(tuple, spark.sql(points).collect()))
+    register_views(spark, stored)
+    assert wire_points == sorted(map(tuple, spark.sql(points).collect()))
+
